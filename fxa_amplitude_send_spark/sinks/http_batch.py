@@ -20,7 +20,6 @@ executors never import this package.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -31,77 +30,89 @@ from ..config import PipelineConfig
 RETRYABLE_STATUSES = frozenset({408, 429, 500, 502, 503, 504})
 
 
-def send_events_http(
-    events: list[dict],
-    endpoint: str,
-    api_key: str,
-    timeout_seconds: float = 5.0,
-    max_retries: int = 3,
-    retry_all_errors: bool = False,
-    backoff_seconds: float = 0.2,
-    conn_box: list | None = None,
-) -> int:
-    """POST one chunk with bounded retry; returns the attempt count.
+def _make_send_events_http():
+    """Factory returning ``send_events_http`` as a closure-local function, so
+    the partition function capturing it is serialized BY VALUE by cloudpickle
+    — executors never import this package (same discipline as
+    functions/hashing.py:_make_js_string_coerce)."""
 
-    Raises the final error after ``max_retries`` retries are exhausted
-    (i.e. at most max_retries + 1 attempts, matching async-retry's contract).
-    Pure stdlib (http.client) — usable verbatim inside executors.
+    def send_events_http(
+        events: list[dict],
+        endpoint: str,
+        api_key: str,
+        timeout_seconds: float = 5.0,
+        max_retries: int = 3,
+        retry_all_errors: bool = False,
+        backoff_seconds: float = 0.2,
+        conn_box: list | None = None,
+    ) -> int:
+        """POST one chunk with bounded retry; returns the attempt count.
 
-    ``conn_box`` is a caller-owned one-slot list holding a persistent
-    ``http.client.HTTP(S)Connection``. Passing the same box across calls
-    reuses one TCP(+TLS) connection for every chunk of a partition — the
-    engine's analogue of the reference's per-request DNS caching
-    (utils.js:13,95), but stronger: the whole connection is kept, not just
-    the resolved address. A connection that errors is closed and re-opened
-    on the next attempt (http.client also auto-reconnects when the server
-    closes between requests, so HTTP/1.0 peers still work — just without
-    reuse). Without a box, a fresh connection is used for this call only.
-    """
-    import http.client
-    import time
-    import urllib.error
-    import urllib.parse
+        Raises the final error after ``max_retries`` retries are exhausted
+        (i.e. at most max_retries + 1 attempts, matching async-retry's contract).
+        Pure stdlib (http.client) — usable verbatim inside executors.
 
-    u = urllib.parse.urlsplit(endpoint)
-    path = (u.path or "/") + (f"?{u.query}" if u.query else "")
-    body = json.dumps({"api_key": api_key, "events": events}).encode("utf-8")
-    headers = {"Content-Type": "application/json"}
-    box = conn_box if conn_box is not None else [None]
+        ``conn_box`` is a caller-owned one-slot list holding a persistent
+        ``http.client.HTTP(S)Connection``. Passing the same box across calls
+        reuses one TCP(+TLS) connection for every chunk of a partition — the
+        engine's analogue of the reference's per-request DNS caching
+        (utils.js:13,95), but stronger: the whole connection is kept, not just
+        the resolved address. A connection that errors is closed and re-opened
+        on the next attempt (http.client also auto-reconnects when the server
+        closes between requests, so HTTP/1.0 peers still work — just without
+        reuse). Without a box, a fresh connection is used for this call only.
+        """
+        import http.client
+        import json
+        import time
+        import urllib.error
+        import urllib.parse
 
-    attempts = 0
-    while True:
-        attempts += 1
-        if box[0] is None:
-            conn_cls = (
-                http.client.HTTPSConnection
-                if u.scheme == "https"
-                else http.client.HTTPConnection
-            )
-            box[0] = conn_cls(u.hostname, u.port, timeout=timeout_seconds)
-        conn = box[0]
-        try:
-            conn.request("POST", path, body=body, headers=headers)
-            resp = conn.getresponse()
-            resp.read()  # drain the body so the connection is reusable
-            status, reason = resp.status, resp.reason
-            resp_headers = dict(resp.getheaders())
-        except (http.client.HTTPException, TimeoutError, OSError):
-            conn.close()
-            box[0] = None
-            if attempts > max_retries:
-                raise
+        u = urllib.parse.urlsplit(endpoint)
+        path = (u.path or "/") + (f"?{u.query}" if u.query else "")
+        body = json.dumps({"api_key": api_key, "events": events}).encode("utf-8")
+        headers = {"Content-Type": "application/json"}
+        box = conn_box if conn_box is not None else [None]
+
+        attempts = 0
+        while True:
+            attempts += 1
+            if box[0] is None:
+                conn_cls = (
+                    http.client.HTTPSConnection
+                    if u.scheme == "https"
+                    else http.client.HTTPConnection
+                )
+                box[0] = conn_cls(u.hostname, u.port, timeout=timeout_seconds)
+            conn = box[0]
+            try:
+                conn.request("POST", path, body=body, headers=headers)
+                resp = conn.getresponse()
+                resp.read()  # drain the body so the connection is reusable
+                status, reason = resp.status, resp.reason
+                resp_headers = dict(resp.getheaders())
+            except (http.client.HTTPException, TimeoutError, OSError):
+                conn.close()
+                box[0] = None
+                if attempts > max_retries:
+                    raise
+                time.sleep(backoff_seconds * attempts)
+                continue
+            if 200 <= status < 300:
+                if conn_box is None:
+                    conn.close()
+                return attempts
+            retryable = retry_all_errors or status in RETRYABLE_STATUSES
+            if not retryable or attempts > max_retries:
+                if conn_box is None:
+                    conn.close()
+                raise urllib.error.HTTPError(endpoint, status, reason, resp_headers, None)
             time.sleep(backoff_seconds * attempts)
-            continue
-        if 200 <= status < 300:
-            if conn_box is None:
-                conn.close()
-            return attempts
-        retryable = retry_all_errors or status in RETRYABLE_STATUSES
-        if not retryable or attempts > max_retries:
-            if conn_box is None:
-                conn.close()
-            raise urllib.error.HTTPError(endpoint, status, reason, resp_headers, None)
-        time.sleep(backoff_seconds * attempts)
+
+    return send_events_http
+
+
+send_events_http = _make_send_events_http()
 
 
 def http_batch_sink(df: DataFrame, config: PipelineConfig) -> None:
@@ -121,7 +132,7 @@ def http_batch_sink(df: DataFrame, config: PipelineConfig) -> None:
         "retries": config.max_retries,
         "retry_all": config.retry_all_errors,
     }
-    send = send_events_http  # bind by value into the closure
+    send = send_events_http  # closure-local def → pickled by value
 
     def send_partition(rows: Iterator) -> None:
         conn_box: list = [None]  # one persistent connection per partition

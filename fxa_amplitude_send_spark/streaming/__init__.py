@@ -2,12 +2,10 @@ from .pipeline import (
     dedup_within_watermark,
     read_payload_stream,
     run_pipeline,
-    streaming_event_pipeline,
 )
 
 __all__ = [
     "dedup_within_watermark",
     "read_payload_stream",
     "run_pipeline",
-    "streaming_event_pipeline",
 ]

@@ -4,10 +4,12 @@ The reference logs pino JSON records per batch — startup.error,
 pubsub.pull.error, amplitude.batch.error, events.processed
 (synchronous-pull.js:7-10,46,79,94-101). The engine's equivalents:
 
-* per-batch counts: df.observe inside foreachBatch (pipeline.py) — computed
-  inline with the sink pass, no extra jobs
+* per-batch counts: two named streaming observes, ``events_in`` and
+  ``events_out``, that run_pipeline (pipeline.py) attaches to its plan once —
+  computed inline with the sink pass, no extra jobs, and reported in each
+  micro-batch's ``StreamingQueryProgress.observedMetrics``
 * query-level progress: a StreamingQueryListener capturing every progress
-  event as a structured record (rows/sec, batch duration, state rows)
+  event as a structured record (rows/sec, batch duration, the two counts)
 """
 
 from __future__ import annotations
@@ -18,6 +20,15 @@ import logging
 from pyspark.sql.streaming import StreamingQueryListener
 
 logger = logging.getLogger("fxa_amplitude_send_spark.metrics")
+
+#: Names of run_pipeline's streaming observations; each holds one count ``n``.
+EVENTS_IN = "events_in"
+EVENTS_OUT = "events_out"
+
+
+def _observed_count(progress, name: str) -> int | None:
+    row = progress.observedMetrics.get(name)
+    return None if row is None else row["n"]
 
 
 class ProgressListener(StreamingQueryListener):
@@ -40,6 +51,8 @@ class ProgressListener(StreamingQueryListener):
                 "query_id": str(p.id),
                 "batch_id": p.batchId,
                 "numInputRows": p.numInputRows,
+                "inputCount": _observed_count(p, EVENTS_IN),
+                "outputCount": _observed_count(p, EVENTS_OUT),
                 "inputRowsPerSecond": p.inputRowsPerSecond,
                 "processedRowsPerSecond": p.processedRowsPerSecond,
                 "durationMs": dict(p.durationMs) if p.durationMs else {},

@@ -7,13 +7,15 @@ Mapping (SURVEY.md §3.4):
 | while(isProcessing) pull ≤N msgs (:44) | micro-batch trigger + per-trigger    |
 |                                        | source rate limit                    |
 | parseMessage map (:56-72)              | the SAME batch expressions —         |
-|                                        | event_pipeline() works unchanged on  |
-|                                        | a streaming DataFrame                |
+|                                        | event_pipeline() applied once to the |
+|                                        | streaming DataFrame, reused by every |
+|                                        | micro-batch                          |
 | send with retry (:74-86)               | foreachBatch → http_batch_sink       |
 | ack after send (:88-92)                | checkpoint commit after the batch    |
 |                                        | function returns (at-least-once)     |
 | Amplitude insert_id dedup (utils:74)   | dropDuplicatesWithinWatermark        |
-| events.processed metrics (:94-101)     | per-batch counts + min/max publish   |
+| events.processed metrics (:94-101)     | named streaming observes events_in / |
+|                                        | events_out → progress observedMetrics|
 
 Sources are declared via ``QueueSource`` + ``read_queue_stream``: the kafka
 kind (maxOffsetsPerTrigger = MAX_EVENTS_PER_BATCH) is the production queue
@@ -32,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.event_pipeline import event_pipeline
+from .metrics import EVENTS_IN, EVENTS_OUT
 
 
 def read_payload_stream(
@@ -112,12 +115,6 @@ def read_queue_stream(spark: SparkSession, src: QueueSource) -> DataFrame:
     return read_payload_stream(spark, src.path, max_files_per_trigger=src.max_per_trigger)
 
 
-def streaming_event_pipeline(stream_df: DataFrame, hmac_key: str) -> DataFrame:
-    """The batch pipeline verbatim — every stage is a stateless projection /
-    filter / explode, all streaming-compatible by construction."""
-    return event_pipeline(stream_df, hmac_key)
-
-
 def dedup_within_watermark(
     df: DataFrame,
     watermark_delay: str = "1 hour",
@@ -140,48 +137,39 @@ def run_pipeline(
     checkpoint_dir: str,
     hmac_key: str | None = None,
     sink: Callable[[DataFrame, PipelineConfig], None] | None = None,
-    metrics_log: list | None = None,
     available_now: bool = True,
 ):
-    """Wire the pipeline to a sink under exactly-once-ish semantics:
-    transform inside foreachBatch, send, THEN let the checkpoint commit —
-    ack-after-send (synchronous-pull.js:88-92). A batch failure leaves the
-    offset uncommitted and the batch replays: at-least-once delivery with
-    idempotent-sink dedup via insert_id.
+    """Wire the pipeline to a sink under at-least-once semantics: send
+    inside foreachBatch, THEN let the checkpoint commit — ack-after-send
+    (synchronous-pull.js:88-92). A batch failure leaves the offset
+    uncommitted and the batch replays; the idempotent sink dedups by
+    insert_id.
 
-    ``metrics_log`` (if given) collects the reference's events.processed
-    record per batch (synchronous-pull.js:94-101): input/output counts.
-    Returns the started StreamingQuery.
+    ``event_pipeline`` is applied to the streaming DataFrame once, before
+    ``writeStream``: every micro-batch reuses the analyzed plan and only the
+    JVM re-plans it, so ``foreachBatch`` does nothing but call the sink (or
+    the noop write). The raw ``payload`` column is dropped before the sink:
+    it carries the un-pseudonymized user_id (utils.js:70-72).
+
+    The reference's events.processed counts (synchronous-pull.js:94-101)
+    ride along the sink's single pass as two named streaming observations,
+    ``events_in`` and ``events_out`` (one ``n`` count each), reported in
+    every ``StreamingQueryProgress.observedMetrics`` and picked up by
+    ``metrics.ProgressListener``. Returns the started StreamingQuery.
     """
     key = hmac_key if hmac_key is not None else config.hmac_key
+    observed_in = stream_df.observe(EVENTS_IN, F.count(F.lit(1)).alias("n"))
+    out = event_pipeline(observed_in, key).drop("payload")
+    out = out.observe(EVENTS_OUT, F.count(F.lit(1)).alias("n"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        # df.observe: input/output counts ride along the sink's single pass
-        # instead of separate count() jobs (R13 metrics without extra scans —
-        # synchronous-pull.js:94-101 computed them inline the same way).
-        in_obs = Observation()
-        observed_in = batch_df.observe(in_obs, F.count(F.lit(1)).alias("n"))
-        out = event_pipeline(observed_in, key)
-        out_obs = Observation()
-        out = out.observe(out_obs, F.count(F.lit(1)).alias("n"))
         if sink is not None:
-            sink(out, config)
+            sink(batch_df, config)
         else:
-            out.write.format("noop").mode("overwrite").save()
-        if metrics_log is not None:
-            metrics_log.append(
-                {
-                    "type": "events.processed",
-                    "batch_id": batch_id,
-                    "inputCount": in_obs.get["n"],
-                    "outputCount": out_obs.get["n"],
-                }
-            )
+            batch_df.write.format("noop").mode("overwrite").save()
 
     writer = (
-        stream_df.writeStream.foreachBatch(process_batch)
+        out.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:

@@ -3,7 +3,11 @@ batch-vs-stream equivalence, retry policy, chunking, stateful dedup."""
 
 from __future__ import annotations
 
+import io
 import json
+import logging
+import pickle
+import re
 import threading
 import urllib.error
 from http.server import BaseHTTPRequestHandler, HTTPServer
@@ -13,6 +17,7 @@ import pytest
 from fxa_amplitude_send_spark.config import PipelineConfig
 from fxa_amplitude_send_spark.operators.event_pipeline import event_pipeline
 from fxa_amplitude_send_spark.sinks.http_batch import http_batch_sink, send_events_http
+from fxa_amplitude_send_spark.streaming import pipeline as pipeline_mod
 from fxa_amplitude_send_spark.streaming.pipeline import (
     dedup_within_watermark,
     read_payload_stream,
@@ -106,6 +111,16 @@ class RecordingServer:
         self.server.shutdown()
 
 
+def observed_counts(query) -> list[tuple[int, int]]:
+    """(inputCount, outputCount) of every micro-batch the query ran, read
+    from the named streaming observations in its progress."""
+    return [
+        (p.observedMetrics["events_in"]["n"], p.observedMetrics["events_out"]["n"])
+        for p in query.recentProgress
+        if p.numInputRows > 0
+    ]
+
+
 def payloads_for(n: int, dup_of: int | None = None) -> list[dict]:
     out = []
     for i in range(n):
@@ -163,6 +178,39 @@ class TestHttpSink:
             assert len(srv.bodies) >= 4  # >=2 chunks per partition
             # exactly one TCP connection per partition, reused across chunks
             assert srv.connections <= 2
+        finally:
+            srv.close()
+
+    def test_partition_fn_pickles_by_value(self):
+        """Executors must not need this package importable: the partition
+        function cloudpickle ships references no fxa_amplitude_send_spark
+        module, and still posts after loading."""
+        from pyspark.cloudpickle import dumps
+        from pyspark.sql import Row
+
+        class CapturingFrame:
+            def foreachPartition(self, fn):  # noqa: N802
+                self.fn = fn
+
+        class NoPackageUnpickler(pickle.Unpickler):
+            def find_class(self, module, name):
+                assert not module.startswith("fxa_amplitude_send_spark"), (module, name)
+                return super().find_class(module, name)
+
+        srv = RecordingServer()
+        try:
+            cfg = PipelineConfig(
+                amplitude_api_key="api-k",
+                hmac_key=KEY,
+                max_events_per_batch=10,
+                endpoint=srv.endpoint,
+            )
+            frame = CapturingFrame()
+            http_batch_sink(frame, cfg)
+            fn = NoPackageUnpickler(io.BytesIO(dumps(frame.fn))).load()
+            fn(iter([Row(user_id="h", event_type="login", time=1.0)]))
+            event = {"user_id": "h", "event_type": "login", "time": 1.0}
+            assert srv.bodies == [{"api_key": "api-k", "events": [event]}]
         finally:
             srv.close()
 
@@ -313,7 +361,6 @@ class TestStreaming:
         }
 
         got: set = set()
-        metrics: list = []
 
         def collecting_sink(df, _cfg):
             got.update(
@@ -329,13 +376,80 @@ class TestStreaming:
             cfg,
             checkpoint_dir=str(tmp_path / "ckpt"),
             sink=collecting_sink,
-            metrics_log=metrics,
         )
         q.awaitTermination(120)
         assert got == expected
-        assert sum(m["inputCount"] for m in metrics) == 30
-        assert sum(m["outputCount"] for m in metrics) == len(expected)
-        assert len(metrics) == 3  # one micro-batch per file
+        counts = observed_counts(q)
+        assert sum(i for i, _ in counts) == 30
+        assert sum(o for _, o in counts) == len(expected)
+        assert len(counts) == 3  # one micro-batch per file
+
+    def test_event_pipeline_built_once_per_query(self, spark, tmp_path, monkeypatch):
+        calls = []
+
+        def counting_event_pipeline(*args, **kwargs):
+            calls.append(1)
+            return event_pipeline(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline_mod, "event_pipeline", counting_event_pipeline)
+        src = str(tmp_path / "in")
+        write_payload_files(payloads_for(9), src, files=3)
+        cfg = PipelineConfig(
+            amplitude_api_key="k", hmac_key=KEY, max_events_per_batch=100
+        )
+        stream = read_payload_stream(spark, src, max_files_per_trigger=1)
+        q = run_pipeline(stream, cfg, checkpoint_dir=str(tmp_path / "ckpt"))
+        assert q.awaitTermination(120)
+        assert observed_counts(q) == [(3, 3)] * 3
+        assert len(calls) == 1  # built once, not once per micro-batch
+
+    def test_http_sink_stream_counts_privacy_and_restart(self, spark, tmp_path):
+        payloads = payloads_for(30)
+        for i, p in enumerate(payloads):
+            if i % 3 == 0:
+                p["user_properties"]["$set"] = {"plan": "x"}
+        src = str(tmp_path / "in")
+        write_payload_files(payloads, src, files=3)
+        batch_df = spark.createDataFrame(
+            [(json.dumps(p),) for p in payloads], "payload string"
+        )
+        n_expected = event_pipeline(batch_df, KEY).count()
+
+        srv = KeepAliveCountingServer()
+        try:
+            cfg = PipelineConfig(
+                amplitude_api_key="k",
+                hmac_key=KEY,
+                max_events_per_batch=100,
+                endpoint=srv.endpoint,
+            )
+            ckpt = str(tmp_path / "ckpt")
+
+            def start():
+                stream = read_payload_stream(spark, src, max_files_per_trigger=1)
+                return run_pipeline(stream, cfg, ckpt, sink=http_batch_sink)
+
+            q = start()
+            assert q.awaitTermination(120)
+            assert q.exception() is None
+            counts = observed_counts(q)
+            assert len(counts) == 3
+            assert sum(i for i, _ in counts) == 30
+            assert sum(o for _, o in counts) == n_expected
+            events = [e for b in srv.bodies for e in b["events"]]
+            assert len(events) == n_expected
+            # no raw envelope and no un-pseudonymized user id leaves the engine
+            assert not any("payload" in e for e in events)
+            assert not re.search(r"u-\d", json.dumps(srv.bodies))
+
+            # restart over the same checkpoint: every offset is acked
+            posted = len(srv.bodies)
+            q2 = start()
+            assert q2.awaitTermination(120)
+            assert observed_counts(q2) == []
+            assert len(srv.bodies) == posted
+        finally:
+            srv.close()
 
     def test_streaming_dedup_within_watermark(self, spark, tmp_path):
         # same logical event in two micro-batches → one survivor
@@ -372,10 +486,11 @@ class TestStreaming:
 
 
 class TestMetrics:
-    def test_progress_listener_captures_batches(self, spark, tmp_path):
+    def test_progress_listener_captures_batches(self, spark, tmp_path, caplog):
         from fxa_amplitude_send_spark.streaming.metrics import ProgressListener
 
-        listener = ProgressListener()
+        caplog.set_level(logging.INFO, logger="fxa_amplitude_send_spark.metrics")
+        listener = ProgressListener(emit_log=True)
         spark.streams.addListener(listener)
         try:
             payloads = payloads_for(12)
@@ -385,35 +500,46 @@ class TestMetrics:
                 amplitude_api_key="k", hmac_key=KEY, max_events_per_batch=100
             )
             stream = read_payload_stream(spark, src, max_files_per_trigger=1)
-            metrics: list = []
             q = run_pipeline(
                 stream,
                 cfg,
                 checkpoint_dir=str(tmp_path / "ckpt_metrics"),
-                metrics_log=metrics,
             )
             q.awaitTermination(120)
             import time
 
+            def processed(records):
+                return [
+                    r
+                    for r in records
+                    if r["type"] == "events.processed" and r["query_id"] == str(q.id)
+                ]
+
             # listener events are delivered asynchronously
             deadline = time.time() + 30
             while time.time() < deadline:
-                progressed = [
-                    r for r in listener.records if r["type"] == "events.processed"
-                ]
-                if len(progressed) >= 2 and any(
+                if len(processed(listener.records)) >= 2 and any(
                     r["type"] == "query.terminated" for r in listener.records
                 ):
                     break
                 time.sleep(0.5)
             assert any(r["type"] == "query.started" for r in listener.records)
-            progressed = [
-                r for r in listener.records if r["type"] == "events.processed"
-            ]
+            progressed = processed(listener.records)
             assert sum(r["numInputRows"] for r in progressed) == 12
             # observe-based per-batch counts agree with the listener totals
-            assert sum(m["inputCount"] for m in metrics) == 12
-            assert all(m["outputCount"] == m["inputCount"] for m in metrics)
+            counts = observed_counts(q)
+            assert len(counts) == 2  # one micro-batch per file
+            assert sum(i for i, _ in counts) == 12
+            assert all(o == i for i, o in counts)
+            # the events.processed record carries them (pino parity)
+            assert [(r["inputCount"], r["outputCount"]) for r in progressed] == counts
+            # emit_log: one JSON line per batch with the same record
+            logged = processed(
+                json.loads(r.getMessage())
+                for r in caplog.records
+                if r.name == "fxa_amplitude_send_spark.metrics"
+            )
+            assert [(r["inputCount"], r["outputCount"]) for r in logged] == counts
         finally:
             spark.streams.removeListener(listener)
 
