@@ -580,7 +580,7 @@ def q_mv_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     MV1 aggregates the base by (event_type, bucket); MV2 aggregates MV1 by
     event_type, refreshing off MV1's OWN change feed (refreshes commit
     kind='merge' with real CDF pre/postimage files —
-    sinks/materialized_view.py _mv_change_rows). The base absorbs an
+    sinks/materialized_view.py _stage_mv_refresh). The base absorbs an
     append and a group delete; each level folds only its upstream's
     changes, and the top of the chain must hash-match the oracle's
     from-scratch two-level aggregate of the final state. Money on the

@@ -47,15 +47,13 @@ from pyspark.sql import functions as F
 from .materialized_view import (
     _change_feed,
     _load_meta,
-    _mv_change_rows,
     _save_meta,
     _sign,
-    _stage_mv_fused,
+    _stage_mv_refresh,
 )
 from .versioned import (
     _commit,
     _count_staged,
-    _stage_data_files,
     current_version,
     read_snapshot,
     write_snapshot,
@@ -246,19 +244,11 @@ def refresh_join_mv(spark: SparkSession, mv_path: str) -> int:
         )
     )
     merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-    fused = _stage_mv_fused(full, keys, measures, mv_path)
-    if fused is not None:
-        files, change_files = fused
-    else:
-        full = full.localCheckpoint(eager=True)  # both staging writes
-        merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-        changes = _mv_change_rows(full, keys, measures)
-        files = _stage_data_files(merged, mv_path)
-        change_files = _stage_data_files(changes, mv_path)
+    files, change_files = _stage_mv_refresh(full, keys, measures, mv_path)
     n = _count_staged(spark, mv_path, files)
     try:
         # kind='merge' + change files: the join view is itself a chainable
-        # CDF source (see materialized_view._mv_change_rows)
+        # CDF source (see materialized_view._stage_mv_refresh)
         v = _commit(
             mv_path, files, n, merged.schema.json(), cur_mv_version,
             appended=[], changes=change_files, kind="merge",

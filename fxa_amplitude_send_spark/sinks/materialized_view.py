@@ -43,8 +43,8 @@ into the retraction cost consciously.
 The view itself is stored as a versioned table, so MV readers get the same
 snapshot isolation / time travel as base-table readers, and every refresh is
 an atomic commit. Refreshes commit ``kind='merge'`` with REAL change files
-(insert / update pre+postimage / delete per changed group, derived from the
-same merge join by ``_mv_change_rows`` — O(changed groups)), which makes a
+(insert / update pre+postimage / delete per changed group, staged with the
+view's data by ``_stage_mv_refresh`` — O(changed groups)), which makes a
 maintained view itself a change-feed SOURCE: another MV (or a join MV using
 it as the dim side) can chain off it, and base movement propagates down the
 chain with every hop O(changes). See test_mv_chain_mv_over_mv and
@@ -66,12 +66,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .versioned import (
-    _FUSED_RESERVED,
     _commit,
     _count_staged,
-    _fused_staging_enabled,
     _read_manifest,
-    _stage_data_files,
     _stage_tagged_files,
     current_version,
     read_snapshot,
@@ -294,53 +291,20 @@ def _change_feed(
     return out
 
 
-def _mv_change_rows(
-    full: DataFrame, keys: list[str], measures: list[str]
-) -> DataFrame:
-    """Derive the refresh's OWN change feed from the annotated merge frame
-    (``_in_cur``/``_in_delta`` presence markers + ``_pre_*`` prior values):
-    inserts (group is new), update pre/postimage pairs (group existed and a
-    measure actually moved), deletes (maintained count reached 0). Same CDF
-    shape as merge_snapshot, O(changed groups) rows — this is what makes a
-    maintained view itself consumable by ANOTHER maintained view."""
-    alive = F.col("mv_count") > 0
-    in_cur, in_delta = F.col("_in_cur"), F.col("_in_delta")
-    changed = F.lit(False)
-    for m in measures:
-        changed = changed | ~F.col(m).eqNullSafe(F.col(f"_pre_{m}"))
-    pre = [F.col(f"_pre_{m}").alias(m) for m in measures]
-    post = [F.col(m) for m in measures]
-
-    def rows(pred, cols, tag):
-        return full.filter(pred).select(
-            *keys, *cols, F.lit(tag).alias("_change_type")
-        )
-
-    return (
-        rows(in_delta & ~in_cur & alive, post, "insert")
-        .unionByName(rows(in_delta & in_cur & alive & changed, pre,
-                          "update_preimage"))
-        .unionByName(rows(in_delta & in_cur & alive & changed, post,
-                          "update_postimage"))
-        .unionByName(rows(in_cur & ~alive, pre, "delete"))
-    )
-
-
-def _stage_mv_fused(
+def _stage_mv_refresh(
     full: DataFrame, keys: list[str], measures: list[str], mv_path: str
-) -> tuple[list[dict], list[dict]] | None:
-    """ONE staging write for a refreshed view AND its change feed: each
-    merged row of the annotated ``full`` frame (mv_count/_in_cur/_in_delta/
-    _pre_* — the refresh merge shape shared by refresh_mv / refresh_star_mv
-    / refresh_join_mv) explodes into its file roles — alive group → data
-    row; new / moved / emptied group → CDF rows, same predicates as
-    _mv_change_rows — so the merge join executes once and the staging costs
-    a single write job instead of checkpoint + two writes. Returns
-    (data_files, change_files), or None when fused staging is disabled
-    (SPARK_GRAFT_FUSED_STAGING=0) or a column name collides with the
-    role superset."""
-    if not _fused_staging_enabled() or (_FUSED_RESERVED & set(keys + measures)):
-        return None
+) -> tuple[list[dict], list[dict]]:
+    """ONE staging write for a refreshed view AND its own change feed: each
+    merged row of the annotated ``full`` frame (mv_count, the ``_in_cur``/
+    ``_in_delta`` presence markers and ``_pre_*`` prior values — the refresh
+    merge shape shared by refresh_mv / refresh_star_mv / refresh_join_mv)
+    explodes into its file roles: an alive group is a data row; a new group
+    is an insert, a group whose measures moved an update pre/postimage pair,
+    an emptied group (count reached 0) a delete. Same CDF shape as
+    merge_snapshot, O(changed groups) change rows — this is what makes a
+    maintained view itself consumable by ANOTHER maintained view. The merge
+    join executes once and staging is a single write job. Returns
+    (data_files, change_files)."""
     alive = F.col("mv_count") > 0
     in_cur, in_delta = F.col("_in_cur"), F.col("_in_delta")
     moved = F.lit(False)
@@ -600,16 +564,7 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
                 *[f"_pre_{mc}" for mc in measures],
             )
     merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-    fused = _stage_mv_fused(full, keys, measures, mv_path)
-    if fused is not None:
-        files, change_files = fused
-    else:
-        # one materialization reused by BOTH staging writes (data + changes)
-        full = full.localCheckpoint(eager=True)
-        merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-        changes = _mv_change_rows(full, keys, measures)
-        files = _stage_data_files(merged, mv_path)
-        change_files = _stage_data_files(changes, mv_path)
+    files, change_files = _stage_mv_refresh(full, keys, measures, mv_path)
     n = _count_staged(spark, mv_path, files)
     try:
         # kind='merge' + explicit change files: downstream incremental

@@ -56,15 +56,13 @@ from pyspark.sql import functions as F
 from .materialized_view import (
     _change_feed,
     _load_meta,
-    _mv_change_rows,
     _save_meta,
     _sign,
-    _stage_mv_fused,
+    _stage_mv_refresh,
 )
 from .versioned import (
     _commit,
     _count_staged,
-    _stage_data_files,
     current_version,
     read_snapshot,
     write_snapshot,
@@ -340,7 +338,7 @@ def refresh_star_mv(spark: SparkSession, mv_path: str) -> int:
     )
     if extreme_cols:
         # multi-consumer only on the extremes path (danger probe + staging);
-        # without extremes the (fused) staging write is the sole consumer
+        # without extremes the staging write is the sole consumer
         full = full.localCheckpoint(eager=True)
         danger_keys = full.filter(F.col("_danger")).select(*keys)
         if danger_keys.limit(1).count():
@@ -385,16 +383,7 @@ def refresh_star_mv(spark: SparkSession, mv_path: str) -> int:
                 .localCheckpoint(eager=True)
             )
     merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-    fused = _stage_mv_fused(full, keys, measures, mv_path)
-    if fused is not None:
-        files, change_files = fused
-    else:
-        if not extreme_cols:
-            full = full.localCheckpoint(eager=True)  # both staging writes
-            merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-        changes = _mv_change_rows(full, keys, measures)
-        files = _stage_data_files(merged, mv_path)
-        change_files = _stage_data_files(changes, mv_path)
+    files, change_files = _stage_mv_refresh(full, keys, measures, mv_path)
     n = _count_staged(spark, mv_path, files)
     try:
         v = _commit(

@@ -355,14 +355,17 @@ class MultiTableTxn:
 
     def staged_changes(self, table: str, spark: SparkSession) -> DataFrame:
         """The CDF rows this transaction's staged merge/delete will publish
-        for ``table`` (columns = table schema + ``_change_type`` in
-        {insert, update_preimage, update_postimage, delete}) — readable
-        BEFORE the commit. This is what lets a downstream aggregate be
+        for ``table`` (columns = the staged base version's table schema +
+        ``_change_type`` in {insert, update_preimage, update_postimage,
+        delete}, whether the op changed rows or none) — readable BEFORE
+        the commit. This is what lets a downstream aggregate be
         maintained from the SAME transaction at O(changes): stage the fact
         merge, derive the summary increment from its staged change files,
         stage the summary merge, then commit both atomically. Without it
         the caller would re-join the batch against the fact table
         (O(fact) per batch) or trust the feed's preimages."""
+        from pyspark.sql.types import StringType, StructType
+
         ops = [
             op
             for op in self._ops.get(table, [])
@@ -370,21 +373,18 @@ class MultiTableTxn:
         ]
         if not ops:
             raise ValueError(f"no staged merge/delete for {table!r}")
-        paths = [
-            os.path.join(table, e["path"]) for op in ops
-            for e in op.get("change_files", [])
-        ]
+        # one merge/delete per table per transaction (_check_stageable)
+        (op,) = ops
+        schema = StructType.fromJson(
+            json.loads(_read_manifest(table, op["base"])["schema"])
+        ).add("_change_type", StringType())
+        paths = [os.path.join(table, e["path"]) for e in op["change_files"]]
         if not paths:
-            # a staged mutation that changed NOTHING (every update was a
-            # no-op): fused staging writes no zero-row placeholder file,
-            # so synthesize the empty frame under the table schema
-            from pyspark.sql.types import StringType, StructType
-
-            schema = StructType.fromJson(
-                json.loads(_read_manifest(table, current_version(table))["schema"])
-            ).add("_change_type", StringType())
+            # every update was a no-op: staging wrote no change file
             return spark.createDataFrame([], schema)
-        return spark.read.parquet(*paths)
+        # read under the schema: change files also carry the null path/pos
+        # padding of the merge-on-read staging superset
+        return spark.read.schema(schema).parquet(*paths)
 
     def staged_paths(self, table: str) -> list[str]:
         """Table-relative paths of every file this transaction staged into

@@ -65,16 +65,13 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(fh)
 
 
-def _file_stats(full_path: str) -> dict[str, list]:
+def _file_stats(md) -> dict[str, list]:
     """Per-file [min, max] for every primitive column, read from the parquet
-    footer at commit time. JSON-serializable values only; columns whose
-    statistics aren't representable (nested, binary) are simply absent —
-    pruning treats absent as unknown (keep the file)."""
+    footer metadata ``md`` at commit time. JSON-serializable values only;
+    columns whose statistics aren't representable (nested, binary) are
+    simply absent — pruning treats absent as unknown (keep the file)."""
     import datetime
 
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(full_path).metadata
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
     for rg in range(md.num_row_groups):
@@ -142,24 +139,22 @@ def _bloom_positions(s: str, bits: int, k: int) -> list[int]:
     return [(h1 + i * h2) % bits for i in range(k)]
 
 
-def _file_blooms(full_path: str, policy: dict) -> dict[str, str]:
-    """Per-column bloom bitsets for one staged file, base64-packed for the
-    JSON manifest. Reads ONLY the policy columns (columnar projection);
-    hashing runs over the file's DISTINCT values. At 8192 bits this is
-    1 KiB per (file, column) of manifest weight — the price of skipping a
-    whole file open at probe time. (Parquet's own footer bloom option
-    would sit one level lower; the manifest-level copy is the piece that
-    prunes BEFORE any file I/O, which is what matters at 100 TB.)"""
+def _file_blooms(pf, policy: dict) -> dict[str, str]:
+    """Per-column bloom bitsets for one staged file (an open
+    ``pyarrow.parquet.ParquetFile``), base64-packed for the JSON manifest.
+    Reads ONLY the policy columns (columnar projection); hashing runs over
+    the file's DISTINCT values. At 8192 bits this is 1 KiB per (file,
+    column) of manifest weight — the price of skipping a whole file open
+    at probe time. (Parquet's own footer bloom option would sit one level
+    lower; the manifest-level copy is the piece that prunes BEFORE any
+    file I/O, which is what matters at 100 TB.)"""
     import base64
 
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(full_path)
     present = [c for c in policy["cols"] if c in pf.schema_arrow.names]
     if not present:
         return {}
     bits, k = policy["bits"], policy["k"]
-    tbl = pq.read_table(full_path, columns=present)
+    tbl = pf.read(columns=present)
     out = {}
     for c in present:
         words = bytearray(bits // 8)
@@ -188,64 +183,64 @@ def _bloom_maybe_contains(entry: dict, col: str, value: object) -> bool:
     )
 
 
-def _stage_data_files(df: DataFrame, path: str) -> list[dict]:
-    """Write df into the shared data/ dir under a unique subdir, then return
-    manifest file entries {path, stats} (paths relative to the table root).
-    Files are immutable once written; the staging subdir keeps concurrent
-    writers from colliding. Footer min/max stats go INTO the manifest so
-    readers can prune files without opening any of them; tables with a
-    bloom policy additionally carry per-file bloom bitsets for
-    equality-probe skipping."""
+def _staged_entries(path: str, rel_dir: str, policy: dict) -> list[dict]:
+    """Manifest entries ``{path, stats, n, bloom?}`` for every parquet file
+    in the staging dir ``rel_dir`` (relative to the table root), opening
+    each footer once. Footer min/max stats go INTO the manifest so readers
+    can prune files without opening any of them; ``n`` is the authoritative
+    footer row count, so commits sum these instead of re-scanning the
+    staged files (one fewer Spark job per commit); a non-empty bloom
+    ``policy`` adds per-file bloom bitsets for equality-probe skipping."""
     import pyarrow.parquet as pq
 
-    policy = _load_bloom_policy(path)
-    stage = f"stage-{uuid.uuid4().hex}"
-    out = os.path.join(path, "data", stage)
-    df.write.mode("overwrite").parquet(out)
     entries = []
-    for name in sorted(os.listdir(out)):
-        if name.endswith(".parquet"):
-            full = os.path.join(out, name)
-            entry = {
-                "path": os.path.join("data", stage, name),
-                "stats": _file_stats(full),
-                # authoritative footer row count: commits sum these
-                # instead of re-scanning the staged files (one fewer
-                # Spark job per commit)
-                "n": pq.ParquetFile(full).metadata.num_rows,
-            }
-            if policy:
-                cols = _file_blooms(full, policy)
-                if cols:
-                    entry["bloom"] = {
-                        "bits": policy["bits"],
-                        "k": policy["k"],
-                        "cols": cols,
-                    }
-            entries.append(entry)
+    for name in sorted(os.listdir(os.path.join(path, rel_dir))):
+        if not name.endswith(".parquet"):
+            continue
+        rel = os.path.join(rel_dir, name)
+        pf = pq.ParquetFile(os.path.join(path, rel))
+        entry = {
+            "path": rel,
+            "stats": _file_stats(pf.metadata),
+            "n": pf.metadata.num_rows,
+        }
+        if policy:
+            cols = _file_blooms(pf, policy)
+            if cols:
+                entry["bloom"] = {
+                    "bits": policy["bits"],
+                    "k": policy["k"],
+                    "cols": cols,
+                }
+        entries.append(entry)
     return entries
 
 
-def _fused_staging_enabled() -> bool:
-    """Default ON: merge/delete file roles (data rows, deletion vectors, CDF
-    change rows) are staged in ONE Spark job via a _kind-partitioned write,
-    so the table-scale join/scan that derives them executes exactly once.
-    ``SPARK_GRAFT_FUSED_STAGING=0`` restores the per-role writes (the
-    round-9 shape) — the interleaved-A/B knob, not a production setting."""
-    return os.environ.get("SPARK_GRAFT_FUSED_STAGING", "1") != "0"
-
-
-#: column names the fused staging superset reserves; a table using any of
-#: them falls back to the per-role writes (correct, just more jobs).
-_FUSED_RESERVED = {"_change_type", "_kind", "path", "pos"}
+def _stage_data_files(df: DataFrame, path: str) -> list[dict]:
+    """Write df into the shared data/ dir under a unique subdir, then return
+    its manifest file entries (see _staged_entries; paths relative to the
+    table root). Files are immutable once written; the staging subdir keeps
+    concurrent writers from colliding."""
+    rel_dir = os.path.join("data", f"stage-{uuid.uuid4().hex}")
+    df.write.mode("overwrite").parquet(os.path.join(path, rel_dir))
+    return _staged_entries(path, rel_dir, _load_bloom_policy(path))
 
 
 def _stage_tagged_files(df: DataFrame, path: str) -> dict[str, list[dict]]:
-    """Stage SEVERAL file roles in ONE Spark job: ``df`` carries a ``_kind``
-    discriminator column and the write splits roles into ``_kind=<role>/``
-    subdirs of one staging dir (partitionBy), so the (possibly table-scale)
-    subtree that produced the rows executes exactly once instead of once
-    per role. Returns manifest entries grouped by role.
+    """Stage SEVERAL file roles in ONE Spark job — the one staging path of
+    every merge, delete and MV refresh. ``df`` is the role superset: the
+    table columns plus whatever the roles add (``_change_type`` for CDF
+    rows, ``path``/``pos`` for merge-on-read deletion vectors) plus a
+    ``_kind`` discriminator. The write splits roles into ``_kind=<role>/``
+    subdirs of one staging dir (partitionBy), so the (possibly
+    table-scale) subtree that produced the rows executes exactly once
+    instead of once per role. Returns manifest entries grouped by role.
+
+    A table column whose name equals one the superset adds would surface
+    as a repeated column of ``df``; that is refused with a ValueError
+    naming it BEFORE anything is written (names compare case-insensitively,
+    as Spark's writer does). The on-disk formats — deletion vectors as
+    (path, pos), change rows as table columns + _change_type — stay fixed.
 
     Files of different roles never share bytes. A role's files may carry
     null superset columns belonging to OTHER roles; every reader is
@@ -254,37 +249,28 @@ def _stage_tagged_files(df: DataFrame, path: str) -> dict[str, list[dict]]:
     + _change_type — so the padding columns are pruned at the columnar
     scan and cost nothing. Bloom bitsets are built only for the committed
     data roles ('data' / 'new'); stats land in every entry as usual."""
-    import pyarrow.parquet as pq
-
+    seen: dict[str, str] = {}
+    for c in df.columns:
+        if c.lower() in seen:
+            raise ValueError(
+                f"column {seen[c.lower()]!r} collides with the {c!r} column "
+                "that merge/delete staging adds (_change_type, _kind, and "
+                "path/pos on merge-on-read tables); rename it"
+            )
+        seen[c.lower()] = c
     policy = _load_bloom_policy(path)
-    stage = f"stage-{uuid.uuid4().hex}"
-    out = os.path.join(path, "data", stage)
-    df.write.mode("overwrite").partitionBy("_kind").parquet(out)
+    stage = os.path.join("data", f"stage-{uuid.uuid4().hex}")
+    df.write.mode("overwrite").partitionBy("_kind").parquet(os.path.join(path, stage))
     entries: dict[str, list[dict]] = {}
-    for kind_dir in sorted(os.listdir(out)):
+    for kind_dir in sorted(os.listdir(os.path.join(path, stage))):
         if not kind_dir.startswith("_kind="):
             continue
         kind = kind_dir.split("=", 1)[1]
-        rows = entries.setdefault(kind, [])
-        kdir = os.path.join(out, kind_dir)
-        for name in sorted(os.listdir(kdir)):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(kdir, name)
-            entry = {
-                "path": os.path.join("data", stage, kind_dir, name),
-                "stats": _file_stats(full),
-                "n": pq.ParquetFile(full).metadata.num_rows,
-            }
-            if policy and kind in ("data", "new"):
-                cols = _file_blooms(full, policy)
-                if cols:
-                    entry["bloom"] = {
-                        "bits": policy["bits"],
-                        "k": policy["k"],
-                        "cols": cols,
-                    }
-            rows.append(entry)
+        entries[kind] = _staged_entries(
+            path,
+            os.path.join(stage, kind_dir),
+            policy if kind in ("data", "new") else {},
+        )
     return entries
 
 
@@ -987,15 +973,9 @@ def vacuum(
 
 
 def _count_staged(spark: SparkSession, path: str, files: list[dict]) -> int:
-    """Row count of a staged file set — from the parquet footer counts
-    captured at staging time (no Spark job); falls back to a scan only for
-    entries that predate the footer-count field (none in practice: this is
-    only ever called on freshly staged entries)."""
-    if files and all("n" in e for e in files):
-        return sum(e["n"] for e in files)
-    if not files:
-        return 0
-    return spark.read.parquet(*[os.path.join(path, e["path"]) for e in files]).count()
+    """Row count of a freshly staged file set, summed from the footer counts
+    captured at staging time (no Spark job)."""
+    return sum(e["n"] for e in files)
 
 
 def read_appended(
@@ -1186,18 +1166,16 @@ def merge_snapshot(
     # change feed must emit the SAME merged values as update_postimage and
     # judge "changed" by the merged value vs the old one — never the update's
     # raw (possibly NULL) fields, which could disagree with the table.
-    # The data-file rewrite and both CDF branches all derive from this ONE
+    # The data-file rewrite and both CDF roles all derive from this ONE
     # join expression. Persisting it (MEMORY_AND_DISK) was measured and
     # REJECTED (round 9, sf0.1 A/B): the updates side broadcasts, so each
     # re-execution is a columnar scan + broadcast probe, while the cache
     # materializes the full O(table) marker-annotated rows through the block
     # manager — q_mv_incremental 3.3→13.3 s, q_cdf_read 2.4→6.2 s,
-    # q_mv_star 5.0→11.7 s WITH the persist. Round 10 removes the
-    # re-executions WITHOUT a cache: every join row explodes into its file
-    # ROLES (data rewrite / CDF post / CDF pre) and one _kind-partitioned
-    # write stages all of them — the join runs exactly once per merge at
-    # any scale, and the write volume is identical to the two per-role
-    # writes it replaces.
+    # q_mv_star 5.0→11.7 s WITH the persist. Instead every join row explodes
+    # into its file ROLES (data rewrite / CDF post / CDF pre) and one
+    # _kind-partitioned write stages all of them — the join runs exactly
+    # once per merge at any scale, with no cache.
     c2 = cur.withColumn("_c_present", F.lit(1)).alias("c")
     u2 = updates.select(*cols).withColumn("_u_present", F.lit(1)).alias("u")
     j2 = c2.join(u2, key_cols, "full_outer")
@@ -1210,64 +1188,40 @@ def merge_snapshot(
     u_present = F.col("_u_present").isNotNull()
     matched = u_present & F.col("_c_present").isNotNull()
 
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        # post-image change type: insert for new keys, update_postimage for
-        # genuinely changed rows, null (no CDF row) for no-op updates and
-        # current-only rows.
-        post_ct = (
-            F.when(u_present & F.col("_c_present").isNull(), F.lit("insert"))
-            .when(matched & changed_pred, F.lit("update_postimage"))
+    # post-image change type: insert for new keys, update_postimage for
+    # genuinely changed rows, null (no CDF row) for no-op updates and
+    # current-only rows. Delta-parity pre-images: for every genuinely
+    # updated key, the OLD row values under _change_type='update_preimage',
+    # so consumers that maintain downstream state incrementally subtract
+    # the pre-image and add the post-image — without them, SUM/COUNT
+    # maintenance under updates would need a time-travel join against the
+    # parent snapshot (O(table), not O(changes)).
+    post_ct = (
+        F.when(u_present & F.col("_c_present").isNull(), F.lit("insert"))
+        .when(matched & changed_pred, F.lit("update_postimage"))
+    )
+
+    def _role(kind: str, vals: dict, ct):
+        # key columns resolve to the join's merged key
+        return F.struct(
+            *[vals.get(x, F.col(x)).alias(x) for x in cols],
+            ct.cast("string").alias("_change_type"),
+            F.lit(kind).alias("_kind"),
         )
 
-        def _role(kind: str, vals: dict, ct):
-            return F.struct(
-                *[vals[x].alias(x) for x in val_cols],
-                ct.cast("string").alias("_change_type"),
-                F.lit(kind).alias("_kind"),
-            )
-
-        pre_val = {x: F.col(f"c.{x}") for x in val_cols}
-        roles = F.array(
-            _role("data", merged_val, F.lit(None)),
-            F.when(post_ct.isNotNull(), _role("cdf", merged_val, post_ct)),
-            F.when(
-                matched & changed_pred,
-                _role("cdf", pre_val, F.lit("update_preimage")),
-            ),
-        )
-        tagged = j2.select(
-            *key_cols, F.explode(F.array_compact(roles)).alias("_r")
-        ).select(*key_cols, "_r.*")
-        staged = _stage_tagged_files(tagged.select(*cols, "_change_type", "_kind"), path)
-        data_files = staged.get("data", [])
-        change_files = staged.get("cdf", [])
-    else:
-        merged = j2.select(
-            *key_cols,
-            *[merged_val[x].alias(x) for x in val_cols],
-        ).select(*cols)
-        changes_post = j2.filter(u_present).select(
-            *key_cols,
-            *[merged_val[x].alias(x) for x in val_cols],
-            F.when(F.col("_c_present").isNull(), F.lit("insert"))
-            .when(changed_pred, F.lit("update_postimage"))
-            .otherwise(F.lit(None))
-            .alias("_change_type"),
-        ).filter(F.col("_change_type").isNotNull()).select(*cols, "_change_type")
-        # Delta-parity pre-images: for every genuinely updated key, the OLD
-        # row values under _change_type='update_preimage'. Consumers that
-        # maintain downstream state incrementally subtract the pre-image and
-        # add the post-image — without pre-images, SUM/COUNT maintenance
-        # under updates would need a time-travel join against the parent
-        # snapshot (O(table), not O(changes)).
-        changes_pre = j2.filter(matched).filter(changed_pred).select(
-            *key_cols,
-            *[F.col(f"c.{x}").alias(x) for x in val_cols],
-            F.lit("update_preimage").alias("_change_type"),
-        ).select(*cols, "_change_type")
-        changes = changes_post.unionByName(changes_pre)
-        data_files = _stage_data_files(merged, path)
-        change_files = _stage_data_files(changes, path)
+    pre_val = {x: F.col(f"c.{x}") for x in val_cols}
+    roles = F.array(
+        _role("data", merged_val, F.lit(None)),
+        F.when(post_ct.isNotNull(), _role("cdf", merged_val, post_ct)),
+        F.when(
+            matched & changed_pred,
+            _role("cdf", pre_val, F.lit("update_preimage")),
+        ),
+    )
+    tagged = j2.select(F.explode(F.array_compact(roles)).alias("_r")).select("_r.*")
+    staged = _stage_tagged_files(tagged, path)
+    data_files = staged.get("data", [])
+    change_files = staged.get("cdf", [])
     # constraints: only rows NEW in this version can introduce a violation
     # (pre-existing rows passed when first written) — validate the
     # insert/update_postimage change rows, O(changes) not O(table)
@@ -1285,6 +1239,38 @@ def merge_snapshot(
         changes=change_files,
         kind="merge",
     )
+
+
+def _stage_dv_and_deletes(
+    matches: DataFrame, schema, path: str
+) -> tuple[list[dict], list[dict]]:
+    """Stage a merge-on-read delete's two roles in ONE write: each row of
+    ``matches`` (live rows carrying _vt_path/_vt_pos identity) becomes a
+    (path, pos) tombstone and a CDF 'delete' pre-image. Both roles derive
+    from the same (table-scale) positioned scan, which one write runs once.
+    Returns (dv_files, change_files)."""
+    from pyspark.sql import functions as F
+
+    nil = F.lit(None)
+    roles = F.array(
+        F.struct(
+            *[nil.cast(f.dataType).alias(f.name) for f in schema.fields],
+            nil.cast("string").alias("_change_type"),
+            F.col("_vt_path").cast("string").alias("path"),
+            F.col("_vt_pos").cast("long").alias("pos"),
+            F.lit("dv").alias("_kind"),
+        ),
+        F.struct(
+            *[F.col(f.name).alias(f.name) for f in schema.fields],
+            F.lit("delete").cast("string").alias("_change_type"),
+            nil.cast("string").alias("path"),
+            nil.cast("long").alias("pos"),
+            F.lit("cdf").alias("_kind"),
+        ),
+    )
+    tagged = matches.select(F.explode(roles).alias("_r")).select("_r.*")
+    staged = _stage_tagged_files(tagged, path)
+    return staged.get("dv", []), staged.get("cdf", [])
 
 
 def delete_keys_mor(
@@ -1308,7 +1294,6 @@ def delete_keys_mor(
         raise FileNotFoundError(f"no committed snapshot at {path}")
     prev = _read_manifest(path, version)
 
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -1318,43 +1303,7 @@ def delete_keys_mor(
     paths = [os.path.join(path, e["path"]) for e in prev["files"]]
     live = _with_positions(spark, path, prev, paths, schema)
     matches = live.join(keys.select(*key_cols).distinct(), key_cols, "left_semi")
-
-    cols = [f.name for f in schema.fields]
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        # one pass: each matched row explodes into tombstone + CDF pre-image,
-        # staged together in one _kind-partitioned write (vs two jobs that
-        # each re-ran the positioned scan + semi-join)
-        types = {f.name: f.dataType for f in schema.fields}
-        nil = F.lit(None)
-        roles = F.array(
-            F.struct(
-                *[nil.cast(types[x]).alias(x) for x in cols],
-                nil.cast("string").alias("_change_type"),
-                F.col("_vt_path").cast("string").alias("path"),
-                F.col("_vt_pos").cast("long").alias("pos"),
-                F.lit("dv").alias("_kind"),
-            ),
-            F.struct(
-                *[F.col(x).alias(x) for x in cols],
-                F.lit("delete").cast("string").alias("_change_type"),
-                nil.cast("string").alias("path"),
-                nil.cast("long").alias("pos"),
-                F.lit("cdf").alias("_kind"),
-            ),
-        )
-        tagged = matches.select(F.explode(roles).alias("_r")).select("_r.*")
-        staged = _stage_tagged_files(tagged, path)
-        dv_files = staged.get("dv", [])
-        change_files = staged.get("cdf", [])
-    else:
-        dv_rows = matches.select(
-            F.col("_vt_path").alias("path"), F.col("_vt_pos").alias("pos")
-        )
-        deleted = matches.drop("_vt_path", "_vt_pos").withColumn(
-            "_change_type", F.lit("delete")
-        )
-        dv_files = _stage_data_files(dv_rows, path)
-        change_files = _stage_data_files(deleted, path)
+    dv_files, change_files = _stage_dv_and_deletes(matches, schema, path)
     n_deleted = sum(e["n"] for e in dv_files)
     return _commit(
         path,
@@ -1458,89 +1407,50 @@ def _stage_merge_mor(
     # REJECTED (interleaved same-session A/B at sf0.1: q_stream_txn_merge
     # median 27.9 s persisted vs 17.6 s unpersisted — when the CDC batch is
     # comparable to the table, funneling every joined row through the block
-    # manager costs more than the scans it saves). Round 9 staged the
-    # effective rows once to a scratch parquet and derived the three file
-    # sets from an O(changes) re-read (1 join + 4 write jobs per merge);
-    # round 10 removes the scratch entirely: each effective row (insert |
-    # value-changed — matched-unchanged rows are complete no-ops and never
-    # leave the join) EXPLODES into its file roles (new row / tombstone /
-    # CDF post / CDF pre) and one _kind-partitioned write stages all of
-    # them — one table pass AND one write job per merge at any scale.
+    # manager costs more than the scans it saves). Instead each effective
+    # row (insert | value-changed — matched-unchanged rows are complete
+    # no-ops and never leave the join) EXPLODES into its file roles (new
+    # row / tombstone / CDF post / CDF pre) and one _kind-partitioned write
+    # stages all of them — one table pass AND one write job per merge at
+    # any scale.
     matched = F.col("_c_present").isNotNull()
     eff = j2.filter(F.col("_c_present").isNull() | changed_pred)
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        types = {f.name: f.dataType for f in schema.fields}
-        null_val = {x: F.lit(None).cast(types[x]) for x in val_cols}
-        pre_val = {x: F.col(f"c.{x}") for x in val_cols}
+    types = {f.name: f.dataType for f in schema.fields}
+    null_val = {x: F.lit(None).cast(types[x]) for x in val_cols}
+    pre_val = {x: F.col(f"c.{x}") for x in val_cols}
 
-        def _role(kind, vals, ct, pth, pos):
-            return F.struct(
-                *[vals[x].alias(x) for x in val_cols],
-                ct.cast("string").alias("_change_type"),
-                pth.cast("string").alias("path"),
-                pos.cast("long").alias("pos"),
-                F.lit(kind).alias("_kind"),
-            )
-
-        nil = F.lit(None)
-        roles = F.array(
-            _role("new", merged_val, nil, nil, nil),
-            F.when(
-                matched,
-                _role("dv", null_val, nil, F.col("c._vt_path"), F.col("c._vt_pos")),
-            ),
-            _role(
-                "cdf",
-                merged_val,
-                F.when(matched, F.lit("update_postimage")).otherwise(F.lit("insert")),
-                nil,
-                nil,
-            ),
-            F.when(matched, _role("cdf", pre_val, F.lit("update_preimage"), nil, nil)),
+    def _role(kind, vals, ct, pth, pos):
+        return F.struct(
+            *[vals[x].alias(x) for x in val_cols],
+            ct.cast("string").alias("_change_type"),
+            pth.cast("string").alias("path"),
+            pos.cast("long").alias("pos"),
+            F.lit(kind).alias("_kind"),
         )
-        tagged = eff.select(
-            *key_cols, F.explode(F.array_compact(roles)).alias("_r")
-        ).select(*key_cols, "_r.*")
-        staged = _stage_tagged_files(tagged, path)
-        new_files = staged.get("new", [])
-        dv_files = staged.get("dv", [])
-        change_files = staged.get("cdf", [])
-    else:
-        combined = eff.select(
-            *key_cols,
-            *[merged_val[x].alias(x) for x in val_cols],
-            *[F.col(f"c.{x}").alias(f"_pre_{x}") for x in val_cols],
-            matched.alias("_matched"),
-            F.col("c._vt_path").alias("_vt_path"),
-            F.col("c._vt_pos").alias("_vt_pos"),
-        )
-        scratch = os.path.join(path, "_tmp", f"merge-{uuid.uuid4().hex}")
-        combined.write.mode("overwrite").parquet(scratch)
-        try:
-            cm = spark.read.schema(combined.schema).parquet(scratch)
-            new_rows = cm.select(*cols)
-            tombstones = cm.filter("_matched").select(
-                F.col("_vt_path").alias("path"), F.col("_vt_pos").alias("pos")
-            )
-            changes = cm.select(
-                *cols,
-                F.when(F.col("_matched"), F.lit("update_postimage"))
-                .otherwise(F.lit("insert"))
-                .alias("_change_type"),
-            ).unionByName(
-                cm.filter("_matched").select(
-                    *key_cols,
-                    *[F.col(f"_pre_{x}").alias(x) for x in val_cols],
-                    F.lit("update_preimage").alias("_change_type"),
-                ).select(*cols, "_change_type")
-            )
-            new_files = _stage_data_files(new_rows, path)
-            dv_files = _stage_data_files(tombstones, path)
-            change_files = _stage_data_files(changes, path)
-        finally:
-            import shutil
 
-            shutil.rmtree(scratch, ignore_errors=True)
+    nil = F.lit(None)
+    roles = F.array(
+        _role("new", merged_val, nil, nil, nil),
+        F.when(
+            matched,
+            _role("dv", null_val, nil, F.col("c._vt_path"), F.col("c._vt_pos")),
+        ),
+        _role(
+            "cdf",
+            merged_val,
+            F.when(matched, F.lit("update_postimage")).otherwise(F.lit("insert")),
+            nil,
+            nil,
+        ),
+        F.when(matched, _role("cdf", pre_val, F.lit("update_preimage"), nil, nil)),
+    )
+    tagged = eff.select(
+        *key_cols, F.explode(F.array_compact(roles)).alias("_r")
+    ).select(*key_cols, "_r.*")
+    staged = _stage_tagged_files(tagged, path)
+    new_files = staged.get("new", [])
+    dv_files = staged.get("dv", [])
+    change_files = staged.get("cdf", [])
     _verify_staged_checks(
         spark, path, change_files, where="_change_type != 'update_preimage'"
     )
@@ -1571,27 +1481,19 @@ def delete_snapshot(spark: SparkSession, path: str, predicate: str) -> int:
     from pyspark.sql import functions as F
 
     # One table pass: each row routes to its role (survivor data file or
-    # CDF delete pre-image) and one _kind-partitioned write stages both —
-    # vs two filtered scans + two write jobs. NULL-predicate rows keep the
-    # historical semantics exactly: filter(NOT pred) and filter(pred) BOTH
-    # dropped them, so they route to no role at all.
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cur.columns)):
-        pred = F.expr(predicate)
-        tagged = cur.select(
-            "*",
-            F.when(pred, F.lit("delete")).alias("_change_type"),
-            F.when(pred, F.lit("cdf")).when(~pred, F.lit("data")).alias("_kind"),
-        ).filter(F.col("_kind").isNotNull())
-        staged = _stage_tagged_files(tagged, path)
-        data_files = staged.get("data", [])
-        change_files = staged.get("cdf", [])
-    else:
-        surviving = cur.filter(f"NOT ({predicate})")
-        deleted = cur.filter(predicate).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        data_files = _stage_data_files(surviving, path)
-        change_files = _stage_data_files(deleted, path)
+    # CDF delete pre-image) and one _kind-partitioned write stages both.
+    # NULL-predicate rows are neither deleted nor kept, matching the
+    # historical semantics where filter(NOT pred) and filter(pred) BOTH
+    # dropped them.
+    pred = F.expr(predicate)
+    tagged = cur.filter(pred.isNotNull()).select(
+        "*",
+        F.when(pred, F.lit("delete")).alias("_change_type"),
+        F.when(pred, F.lit("cdf")).otherwise(F.lit("data")).alias("_kind"),
+    )
+    staged = _stage_tagged_files(tagged, path)
+    data_files = staged.get("data", [])
+    change_files = staged.get("cdf", [])
     n = _count_staged(spark, path, data_files)
     return _commit(
         path,
@@ -1652,60 +1554,14 @@ def _stage_delete_mor(
     the caller's commit. Positions bind to ``prev``'s file set — a deferred
     commit (MultiTableTxn.stage_delete) must verify the parent is still
     ``prev``."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
     paths = [os.path.join(path, e["path"]) for e in prev["files"]]
     live = _with_positions(spark, path, prev, paths, schema)
-    # tombstones AND change pre-images derive from the same filtered scan —
-    # staged directly, each write would re-run the O(table) scan. Round 9
-    # wrote the O(deleted) match set once to a scratch parquet and derived
-    # both file sets from the re-read (3 jobs); round 10 explodes each
-    # matched row into its two roles (tombstone + CDF pre-image) and stages
-    # both in ONE _kind-partitioned write: one table pass, one write job.
-    matches = live.filter(predicate)
-    cols = [f.name for f in schema.fields]
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        types = {f.name: f.dataType for f in schema.fields}
-        nil = F.lit(None)
-        roles = F.array(
-            F.struct(
-                *[nil.cast(types[x]).alias(x) for x in cols],
-                nil.cast("string").alias("_change_type"),
-                F.col("_vt_path").cast("string").alias("path"),
-                F.col("_vt_pos").cast("long").alias("pos"),
-                F.lit("dv").alias("_kind"),
-            ),
-            F.struct(
-                *[F.col(x).alias(x) for x in cols],
-                F.lit("delete").cast("string").alias("_change_type"),
-                nil.cast("string").alias("path"),
-                nil.cast("long").alias("pos"),
-                F.lit("cdf").alias("_kind"),
-            ),
-        )
-        tagged = matches.select(F.explode(roles).alias("_r")).select("_r.*")
-        staged = _stage_tagged_files(tagged, path)
-        dv_files = staged.get("dv", [])
-        change_files = staged.get("cdf", [])
-    else:
-        scratch = os.path.join(path, "_tmp", f"delete-{uuid.uuid4().hex}")
-        matches.write.mode("overwrite").parquet(scratch)
-        try:
-            cm = spark.read.schema(matches.schema).parquet(scratch)
-            dv_rows = cm.select(
-                F.col("_vt_path").alias("path"), F.col("_vt_pos").alias("pos")
-            )
-            deleted = cm.drop("_vt_path", "_vt_pos").withColumn(
-                "_change_type", F.lit("delete")
-            )
-            dv_files = _stage_data_files(dv_rows, path)
-            change_files = _stage_data_files(deleted, path)
-        finally:
-            import shutil
-
-            shutil.rmtree(scratch, ignore_errors=True)
+    dv_files, change_files = _stage_dv_and_deletes(
+        live.filter(predicate), schema, path
+    )
     return {
         "dv_files": dv_files,
         "change_files": change_files,

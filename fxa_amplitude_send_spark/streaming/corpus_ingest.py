@@ -103,16 +103,19 @@ def ingest_batch_neardup(
     ``threshold``) duplicate of anything previously ingested, or of an
     earlier-keyed doc in the same batch.
 
-    The persisted index is the LSH decomposition of every admitted doc:
+    The persisted index is the LSH decomposition of every admitted doc,
+    both roles in one ``_kind``-partitioned dir (columns of the other role
+    are null):
 
-        <index>/bands/  (fingerprint, band, bhash)   band keys ONLY — the
-                                                     join side; 8 small rows
-                                                     per doc, hash-partitioned
-                                                     by (band, bhash)
-        <index>/sigs/   (fingerprint, sig)           one 64-long signature
-                                                     per doc — fetched only
-                                                     for band-colliding
-                                                     candidates
+        <index>/parts/_kind=bands/  (fingerprint, band, bhash)
+            band keys ONLY — the join side; 8 small rows per doc
+        <index>/parts/_kind=sigs/   (fingerprint, sig)
+            one 64-long signature per doc — fetched only for
+            band-colliding candidates
+
+    An index in the older ``<index>/{bands,sigs}/`` layout (no ``parts/``)
+    is refused with a RuntimeError: reading it as "no history" would
+    re-admit every near-dup it already holds.
 
     Per batch the history check is: batch bands ⋈ index bands on
     (band, bhash) → candidate pairs (expected O(near-dup pairs), never
@@ -143,6 +146,17 @@ def ingest_batch_neardup(
         shingles_col,
     )
 
+    parts_dir = os.path.join(index_path, "parts")
+    legacy = [
+        d for d in ("bands", "sigs") if os.path.exists(os.path.join(index_path, d))
+    ]
+    if legacy and not os.path.exists(parts_dir):
+        raise RuntimeError(
+            f"near-dup index {index_path} has the legacy layout "
+            f"({', '.join(d + '/' for d in legacy)}) but no parts/ dir; only "
+            "parts/_kind={bands,sigs} is read — rebuild the index by "
+            "re-ingesting the admitted documents into a fresh index path"
+        )
     spark = batch_docs.sparkSession
     id_col = batch_docs.columns[0]
 
@@ -204,10 +218,6 @@ def ingest_batch_neardup(
     # (narrower shuffle, one less exchange; guide §2.3). The HISTORY
     # path keeps its pair dedup because there duplicates would multiply
     # a subsequent signature-fetch join, not an inline expression.
-    # SPARK_GRAFT_NEARDUP_PAIR_DEDUP=1 restores the round-8 wide dedup —
-    # the interleaved-A/B measurement seam, not a production setting.
-    if os.environ.get("SPARK_GRAFT_NEARDUP_PAIR_DEDUP") == "1":
-        pairs = pairs.dropDuplicates(["_a", "_b"])
     losers = (
         pairs
         .filter(agree >= threshold)
@@ -221,7 +231,6 @@ def ingest_batch_neardup(
     # per-batch index update is a single write job (was two writes of the
     # same checkpointed frame); readers scan one role's subdir with the
     # other role's null columns pruned at the columnar scan.
-    parts_dir = os.path.join(index_path, "parts")
     bands_dir = os.path.join(parts_dir, "_kind=bands")
     sigs_dir = os.path.join(parts_dir, "_kind=sigs")
     if os.path.exists(bands_dir):

@@ -3,9 +3,10 @@ fingerprint index, exactly-once table appends, crash-replay repair."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from fxa_amplitude_send_spark.sinks.versioned import read_snapshot
+from fxa_amplitude_send_spark.sinks.versioned import current_version, read_snapshot
 from fxa_amplitude_send_spark.sources import load_table
 from fxa_amplitude_send_spark.streaming.corpus_ingest import (
     dedup_ingest_stream,
@@ -184,3 +185,23 @@ def test_neardup_streaming_ingest_end_to_end(spark, sf_smoke, tmp_path):
     # near-dup pairs the corpus happens to contain
     assert got.count() == got.select("text").distinct().count()
     assert got.count() > 0
+
+
+def test_neardup_refuses_legacy_index_layout(spark, sf_smoke, tmp_path):
+    """An index in the older <index>/{bands,sigs} layout (no parts/) must
+    fail loudly: reading it as "no history" would re-admit near-dups of
+    documents it already holds."""
+    from fxa_amplitude_send_spark.streaming.corpus_ingest import (
+        ingest_batch_neardup,
+    )
+
+    index = tmp_path / "index"
+    spark.createDataFrame(
+        [("fp", 0, 1)], "fingerprint string, band int, bhash bigint"
+    ).write.parquet(str(index / "bands"))
+    table = str(tmp_path / "corpus")
+    with pytest.raises(RuntimeError, match="legacy layout"):
+        ingest_batch_neardup(
+            _docs(spark, sf_smoke).filter("doc_id < 5"), table, str(index), "t-1"
+        )
+    assert current_version(table) == 0, "nothing admitted"

@@ -585,3 +585,32 @@ def test_stream_cdc_merge_crash_after_marker_recovers_and_replays(spark, tmp_pat
     q2.awaitTermination()
     assert current_version(fact) == 3 and current_version(summ) == 3
     assert {r.k: r.v for r in read_snapshot(spark, fact).collect()} == got
+
+
+@pytest.mark.parametrize("kind", ["merge", "delete", "noop_merge"])
+def test_staged_changes_columns_are_base_schema_plus_change_type(
+    spark, tmp_path, kind
+):
+    """staged_changes returns the staged base version's table columns +
+    _change_type whatever the op: merge-on-read change files also carry
+    the null path/pos padding of the staging superset, and an op that
+    changed nothing has no change file at all — even after CURRENT's
+    schema evolved past the staged base."""
+    from fxa_amplitude_send_spark.sinks.versioned import append_snapshot_evolve
+
+    (t,) = _mk_tables(spark, tmp_path, n=1)
+    txn = MultiTableTxn(str(tmp_path / "txlog"))
+    if kind == "merge":
+        txn.stage_merge(t, spark.createDataFrame([Row(k=1, v=99), Row(k=5, v=50)]), ["k"])
+        want = {(1, 10, "update_preimage"), (1, 99, "update_postimage"), (5, 50, "insert")}
+    elif kind == "delete":
+        txn.stage_delete(t, "k = 1", spark)
+        want = {(1, 10, "delete")}
+    else:
+        txn.stage_merge(t, spark.createDataFrame([Row(k=1, v=10)]), ["k"])
+        want = set()
+    append_snapshot_evolve(spark.createDataFrame([Row(k=7, v=70, w="x")]), t)
+
+    cdf = txn.staged_changes(t, spark)
+    assert cdf.columns == ["k", "v", "_change_type"]
+    assert {tuple(r) for r in cdf.collect()} == want

@@ -9,9 +9,10 @@ Usage:
   python tools/ab_timer.py QUERY[,QUERY...] ENVVAR=a|b[,ENVVAR2=...] [reps]
 
 Each variant spec is ENV assignments applied before the query function runs
-(query functions read the env at call time). Example:
+(query functions read the env at call time). Example — the stateful stream
+gates' shuffle-partition count at 4 vs 8:
 
-  python tools/ab_timer.py q_stream_txn_merge SPARK_GRAFT_MOR_PERSIST=1|0 6
+  python tools/ab_timer.py q_stream_tumbling SPARK_GRAFT_STREAM_PARTITIONS=4|8 6
 """
 
 from __future__ import annotations
