@@ -6,10 +6,11 @@ then dashboard queries answered FROM the view by the rewrite layer.
 
 Walks through:
   1. three versioned base tables (orders / customer / nation)
-  2. create_star_mv — snowflake COUNT/SUM/MIN/MAX view grouped by nation
+  2. create_mv with two dims — snowflake COUNT/SUM/MIN/MAX view grouped
+     by nation
   3. movement on every table (fact append + delete, customer re-keyed to
      another nation, nations renamed into one bloc)
-  4. ONE refresh_star_mv call folding the telescoping delta
+  4. ONE refresh_mv call folding the telescoping delta
   5. answer_join_aggregate routing a coarser dashboard aggregate to the
      view (and proving the fallback when the view can't answer)
 """
@@ -28,10 +29,10 @@ from fxa_amplitude_send_spark.session import build_session  # noqa: E402
 from fxa_amplitude_send_spark.sinks.mv_rewrite import (  # noqa: E402
     answer_join_aggregate,
 )
-from fxa_amplitude_send_spark.sinks.star_mv import (  # noqa: E402
-    create_star_mv,
-    read_star_mv,
-    refresh_star_mv,
+from fxa_amplitude_send_spark.sinks.materialized_view import (  # noqa: E402
+    create_mv,
+    read_mv,
+    refresh_mv,
 )
 from fxa_amplitude_send_spark.sinks.versioned import (  # noqa: E402
     append_snapshot,
@@ -69,13 +70,12 @@ def main() -> None:
     write_snapshot(nation, np_)
 
     print("== 2. create star view: orders ⋈ customer ⋈ nation by n_name ==")
-    create_star_mv(
-        spark, fp,
-        [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
-        mv, keys=["n_name"], sums=["o_totalprice"],
+    create_mv(
+        spark, fp, mv, keys=["n_name"], sums=["o_totalprice"],
         mins=["o_totalprice"], maxs=["o_totalprice"],
+        dims=[{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
     )
-    read_star_mv(spark, mv).orderBy("n_name").show(5, truncate=False)
+    read_mv(spark, mv).orderBy("n_name").show(5, truncate=False)
 
     print("== 3. every table moves ==")
     append_snapshot(orders.filter("o_orderkey % 2 = 1"), fp)
@@ -94,8 +94,8 @@ def main() -> None:
     merge_snapshot(spark, np_, bloc, ["nationkey"])
 
     print("== 4. ONE incremental refresh folds the telescoping delta ==")
-    refresh_star_mv(spark, mv)
-    read_star_mv(spark, mv).orderBy("n_name").show(5, truncate=False)
+    refresh_mv(spark, mv)
+    read_mv(spark, mv).orderBy("n_name").show(5, truncate=False)
 
     print("== 5. dashboard aggregate answered FROM the view ==")
     dims = [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}]

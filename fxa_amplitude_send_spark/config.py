@@ -9,7 +9,7 @@ construction so a misconfigured job fails before any Spark work is scheduled.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 class ConfigError(ValueError):
@@ -39,8 +39,6 @@ class PipelineConfig:
     endpoint: str = "https://api.amplitude.com/batch"
     timeout_seconds: float = 5.0
     retry_all_errors: bool = False
-    quarantine_path: str | None = None
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         missing = [

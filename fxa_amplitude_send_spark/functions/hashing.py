@@ -293,11 +293,21 @@ def js_contrib_grid_double(c: Column, scale: int) -> Column:
     """Contribution of a DOUBLE property constrained to the 10^-scale
     decimal grid (the engine's money/millis discipline): 0.0, NaN and null
     are falsy-skipped; otherwise ECMA-262 decimal layout via the exact
-    scaled-integer reconstruction."""
-    cents = F.round(c * F.lit(10**scale)).cast("long")
-    return F.when(
-        c.isNotNull() & ~F.isnan(c) & (c != 0.0), _js_grid_decimal_str(cents, scale)
-    ).otherwise(F.lit(""))
+    scaled-integer reconstruction.
+
+    Total over every double: a value whose scaled integer does not fit in a
+    long (|v·10^scale| >= 2^63, e.g. a time of 1e300 or a session id that
+    parseInt repaired to 1e23) renders as Spark's own double string
+    ('1.0E300', 'Infinity') instead of raising an ANSI cast overflow, which
+    would fail every micro-batch that carries such an event."""
+    scaled = F.round(c * F.lit(10**scale))
+    # strict bound: -2^63 itself would overflow the abs() in the layout
+    fits = F.abs(scaled) < F.lit(float(2**63))
+    return (
+        F.when(c.isNull() | F.isnan(c) | (c == 0.0), F.lit(""))
+        .when(fits, _js_grid_decimal_str(scaled.cast("long"), scale))
+        .otherwise(c.cast("string"))
+    )
 
 
 def js_contrib_integral_double(c: Column) -> Column:

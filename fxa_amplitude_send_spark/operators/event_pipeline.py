@@ -329,7 +329,12 @@ def event_pipeline(
     tests/test_event_pipeline.py). Pass False for exotic payloads whose
     numeric fields leave that grid (sub-microsecond times, fractional
     session ids beyond 3 decimals), where only the generic Python coercion
-    reproduces ECMA-262 shortest-round-trip layout.
+    reproduces ECMA-262 shortest-round-trip layout. Numbers too large for
+    the millisecond grid (|v|·1000 >= 2^63: a ``time`` of 1e300, a string
+    session id that parseInt repairs to 1e23) diverge the same way: the JVM
+    path hashes Spark's double string ('1.0E300', not JS '1e+300') — a
+    deterministic insert_id, never an overflow that would fail and replay
+    the micro-batch forever.
     """
     from ..functions.hashing import hmac_user_and_insert_id
 

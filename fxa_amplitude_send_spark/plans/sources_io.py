@@ -509,15 +509,16 @@ def q_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN-view maintenance under the correctness gate
-    (sinks/join_mv.py): a COUNT/SUM view over orders ⋈ customer grouped by
-    a DIM-side attribute is created over half the fact; then the fact
-    absorbs an append + a delete AND the dim absorbs a segment-rewriting
-    merge in the same refresh window. One refresh folds the two-term
-    signed delta (ΔF ⋈ D_new + F_old ⋈ ΔD) — fact-only movement never
-    rescans the fact — and the maintained view must hash-match the
-    oracle's from-scratch join aggregate of the final state. Money on the
-    exact integer-cents grid (BIGINT sums), engine- and SF-independent."""
-    from ..sinks.join_mv import create_join_mv, read_join_mv, refresh_join_mv
+    (sinks/materialized_view.py with one dim): a COUNT/SUM view over
+    orders ⋈ customer grouped by a DIM-side attribute is created over half
+    the fact; then the fact absorbs an append + a delete AND the dim
+    absorbs a segment-rewriting merge in the same refresh window. One
+    refresh folds the two-term signed delta (ΔF ⋈ D_new + F_old ⋈ ΔD) —
+    fact-only movement never rescans the fact — and the maintained view
+    must hash-match the oracle's from-scratch join aggregate of the final
+    state. Money on the exact integer-cents grid (BIGINT sums), engine- and
+    SF-independent."""
+    from ..sinks.materialized_view import create_mv, read_mv, refresh_mv
     from ..sinks.versioned import (
         append_snapshot,
         delete_snapshot,
@@ -539,9 +540,9 @@ def q_mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = _work_root("jmv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), fp)  # f v1
     write_snapshot(cust, dp)                                         # d v1
-    create_join_mv(
-        spark, fp, dp, mv,
-        on=["custkey"], keys=["c_mktsegment"], sums=["price_c"],
+    create_mv(
+        spark, fp, mv, keys=["c_mktsegment"], sums=["price_c"],
+        dims=[{"path": dp, "on": ["custkey"]}],
     )
     append_snapshot(orders.filter(F.col("o_orderkey") % 2 == 1), fp)  # f v2
     delete_snapshot(spark, fp, "o_totalprice > 200000")               # f v3
@@ -549,8 +550,8 @@ def q_mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment", F.lit("REZONED")
     )
     merge_snapshot(spark, dp, rezoned, ["custkey"])                   # d v2
-    refresh_join_mv(spark, mv)  # both sides fold in ONE window
-    return read_join_mv(spark, mv).select(
+    refresh_mv(spark, mv)  # both sides fold in ONE window
+    return read_mv(spark, mv).select(
         "c_mktsegment",
         "mv_count",
         F.col("sum_price_c").cast("long").alias("sum_price_c"),
@@ -642,18 +643,19 @@ def q_mv_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_mv_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snowflake-view maintenance under the correctness gate
-    (sinks/star_mv.py): a COUNT/SUM view over orders ⋈ customer ⋈ nation
-    grouped by the OUTERMOST dim's attribute (n_name) is created over half
-    the fact; then in ONE refresh window the fact absorbs an append + a
-    delete, the middle dim absorbs a nation-migrating merge (the join key
-    itself changes — rows move between outer groups), and the outer dim
-    absorbs a group-MERGING rename (every ASIA nation becomes one group).
+    (sinks/materialized_view.py with two dims): a COUNT/SUM view over
+    orders ⋈ customer ⋈ nation grouped by the OUTERMOST dim's attribute
+    (n_name) is created over half the fact; then in ONE refresh window the
+    fact absorbs an append + a delete, the middle dim absorbs a
+    nation-migrating merge (the join key itself changes — rows move
+    between outer groups), and the outer dim absorbs a group-MERGING rename
+    (every ASIA nation becomes one group).
     One refresh folds the telescoping three-term signed delta — fact-only
     movement never rescans the fact — and the maintained view must
     hash-match the oracle's from-scratch two-hop join aggregate of the
     final state. Money on the exact integer-cents grid (BIGINT sums),
     engine- and SF-independent."""
-    from ..sinks.star_mv import create_star_mv, read_star_mv, refresh_star_mv
+    from ..sinks.materialized_view import create_mv, read_mv, refresh_mv
     from ..sinks.versioned import (
         append_snapshot,
         delete_snapshot,
@@ -682,10 +684,12 @@ def q_mv_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), fp)  # f v1
     write_snapshot(cust, cp)                                         # c v1
     write_snapshot(nation, np_)                                      # n v1
-    create_star_mv(
-        spark, fp,
-        [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
-        mv, keys=["n_name"], sums=["price_c"],
+    create_mv(
+        spark, fp, mv, keys=["n_name"], sums=["price_c"],
+        dims=[
+            {"path": cp, "on": ["custkey"]},
+            {"path": np_, "on": ["nationkey"]},
+        ],
     )
     append_snapshot(orders.filter(F.col("o_orderkey") % 2 == 1), fp)  # f v2
     delete_snapshot(spark, fp, "o_totalprice > 200000")               # f v3
@@ -698,8 +702,8 @@ def q_mv_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_name", F.lit("ASIA-ZONE"))
     )
     merge_snapshot(spark, np_, renamed, ["nationkey"])                # n v2
-    refresh_star_mv(spark, mv)  # all three tables fold in ONE window
-    return read_star_mv(spark, mv).select(
+    refresh_mv(spark, mv)  # all three tables fold in ONE window
+    return read_mv(spark, mv).select(
         "n_name",
         "mv_count",
         F.col("sum_price_c").cast("long").alias("sum_price_c"),
@@ -800,7 +804,7 @@ def q_mv_rewrite_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     freshness test must route to the MV (a fallback join raises), so the
     gate pins join-view maintenance and rewrite answering together.
     Money on the exact integer-cents grid."""
-    from ..sinks.join_mv import create_join_mv, refresh_join_mv
+    from ..sinks.materialized_view import create_mv, refresh_mv
     from ..sinks.mv_rewrite import answer_join_aggregate
     from ..sinks.versioned import (
         append_snapshot,
@@ -824,9 +828,9 @@ def q_mv_rewrite_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = _work_root("rwjmv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), fp)   # f v1
     write_snapshot(cust, dp)                                          # d v1
-    create_join_mv(
-        spark, fp, dp, mv,
-        on=["custkey"], keys=["c_mktsegment", "obucket"], sums=["price_c"],
+    create_mv(
+        spark, fp, mv, keys=["c_mktsegment", "obucket"], sums=["price_c"],
+        dims=[{"path": dp, "on": ["custkey"]}],
     )
     append_snapshot(orders.filter(F.col("o_orderkey") % 2 == 1), fp)  # f v2
     delete_snapshot(spark, fp, "o_totalprice > 250000")               # f v3
@@ -834,7 +838,7 @@ def q_mv_rewrite_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment", F.lit("HOME")
     )
     merge_snapshot(spark, dp, renamed, ["custkey"])                   # d v2
-    refresh_join_mv(spark, mv)
+    refresh_mv(spark, mv)
     out, src = answer_join_aggregate(
         spark, fp, [{"path": dp, "on": ["custkey"]}],
         keys=["c_mktsegment"], sums=["price_c"], mv_paths=[mv],
@@ -1074,16 +1078,16 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_mv_star_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN/MAX maintenance OVER A JOIN under the correctness gate
-    (sinks/star_mv.py recompute-on-retraction): a COUNT/SUM/MIN/MAX view
-    over events ⋈ type-dim grouped by the dim's category is maintained
-    through a fact append (extremes fold via least/greatest), a fact
-    delete that retracts ~every group's max (danger groups re-aggregate
-    from the CURRENT join), and a dim category-rekey merge that migrates
-    one event type's rows — and their extremes — between groups via the
-    CDF pre/postimage pair. One refresh folds all three; the view must
-    hash-match the oracle's from-scratch join aggregate. Integer-cents
-    grid throughout."""
-    from ..sinks.star_mv import create_star_mv, read_star_mv, refresh_star_mv
+    (sinks/materialized_view.py recompute-on-retraction): a
+    COUNT/SUM/MIN/MAX view over events ⋈ type-dim grouped by the dim's
+    category is maintained through a fact append (extremes fold via
+    least/greatest), a fact delete that retracts ~every group's max
+    (danger groups re-aggregate from the CURRENT join), and a dim
+    category-rekey merge that migrates one event type's rows — and their
+    extremes — between groups via the CDF pre/postimage pair. One refresh
+    folds all three; the view must hash-match the oracle's from-scratch
+    join aggregate. Integer-cents grid throughout."""
+    from ..sinks.materialized_view import create_mv, read_mv, refresh_mv
     from ..sinks.versioned import (
         append_snapshot,
         delete_snapshot,
@@ -1107,10 +1111,10 @@ def q_mv_star_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = _work_root("smmv", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), fp)   # f v1
     write_snapshot(dim, dp)                                     # d v1
-    create_star_mv(
-        spark, fp, [{"path": dp, "on": ["event_type"]}], mv,
-        keys=["category"], sums=["value_c"],
+    create_mv(
+        spark, fp, mv, keys=["category"], sums=["value_c"],
         mins=["value_c"], maxs=["value_c"],
+        dims=[{"path": dp, "on": ["event_type"]}],
     )
     append_snapshot(ev.filter(F.col("event_id") % 2 == 1), fp)  # f v2
     delete_snapshot(spark, fp, "value_c >= 7500")               # f v3
@@ -1118,8 +1122,8 @@ def q_mv_star_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         "category", F.lit("passive")
     )
     merge_snapshot(spark, dp, rekeyed, ["event_type"])          # d v2
-    refresh_star_mv(spark, mv)  # all three movements in ONE window
-    return read_star_mv(spark, mv).select(
+    refresh_mv(spark, mv)  # all three movements in ONE window
+    return read_mv(spark, mv).select(
         "category",
         "mv_count",
         F.col("sum_value_c").cast("long").alias("sum_value_c"),
@@ -1972,9 +1976,19 @@ def q_stream_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = None
     for i in range(4):
         sub = _os.path.join(tmp, f"_b={i}")
-        part = [f for f in _os.listdir(sub) if f.endswith(".parquet")][0]
         dst = _os.path.join(stage, f"b{i}.parquet")
-        _os.rename(_os.path.join(sub, part), dst)
+        if _os.path.isdir(sub):
+            part = [f for f in _os.listdir(sub) if f.endswith(".parquet")][0]
+            _os.rename(_os.path.join(sub, part), dst)
+        else:
+            # an empty batch (small SF) gets no _b=i dir from partitionBy;
+            # stage it schema-only so the feed keeps 4 files / 4 batches
+            import pyarrow.parquet as _pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            _pq.write_table(
+                to_arrow_schema(tagged.drop("_b").schema).empty_table(), dst
+            )
         # updates reference insert-batch keys, so arrival ORDER is part of
         # the CDC contract; the file source orders by mtime — pin it.
         if now is None:
@@ -2046,7 +2060,8 @@ def q_stream_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    n_batches = len([p for p in q.recentProgress if p.get("numInputRows")])
+    # counted by batch id, not by rows: an empty CDC batch still commits
+    n_batches = len({p.get("batchId") for p in q.recentProgress})
     if n_batches < 4:  # one CDC transaction per micro-batch IS the point
         raise RuntimeError(
             f"q_stream_txn_merge: expected >=4 micro-batches, got {n_batches}"
@@ -3270,10 +3285,10 @@ def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks.materialized_view import _load_meta
 
     meta = _load_meta(mv)
-    if meta["base_version_synced"] != current_version(table):
+    if meta["versions_synced"][0] != current_version(table):
         raise RuntimeError(
             "q_stream_mv: view not synced at stream end "
-            f"(synced={meta['base_version_synced']}, "
+            f"(synced={meta['versions_synced'][0]}, "
             f"current={current_version(table)})"
         )
     return read_mv(spark, mv).select(

@@ -1,12 +1,17 @@
 """Incrementally maintained materialized views over versioned tables.
 
 A materialized view here is a grouped aggregate — ``GROUP BY keys`` with
-``COUNT(*)`` and ``SUM(col)`` measures — kept in sync with a versioned base
-table (sinks/versioned.py) by consuming its change feed instead of
-recomputing from scratch. This is the classic *counting algorithm* for
-incremental view maintenance (Gupta & Mumick, "Maintenance of Materialized
-Views"), which is what a 100 TB lakehouse needs: a refresh costs
-O(changed rows since last refresh), never O(base table).
+``COUNT(*)`` and ``SUM(col)`` measures, optionally MIN/MAX and KMV
+distinct sketches — over a CHAIN of versioned tables (sinks/versioned.py)
+``T0 ⋈ T1 ⋈ … ⋈ Tn``, kept in sync by consuming their change feeds instead
+of recomputing from scratch. ``T0`` is the base (the fact); each dim ``Ti``
+joins on columns already in scope — provided by the base or an EARLIER
+dim — which admits a single table (no dims), star shapes (every dim keyed
+off the fact) and snowflake shapes (dims keyed off other dims). This is
+the classic *counting algorithm* for incremental view maintenance (Gupta &
+Mumick, "Maintenance of Materialized Views"), which is what a 100 TB
+lakehouse needs: a refresh costs O(changed rows since last refresh), never
+O(base table).
 
 Change-row algebra: each CDF row carries a sign —
 
@@ -15,46 +20,94 @@ Change-row algebra: each CDF row carries a sign —
 
 so the per-group delta is ``SUM(sign)`` for the count and ``SUM(sign·x)``
 for each sum measure. Applying the delta to the stored view is a key-equi
-outer merge; groups whose maintained count reaches 0 are dropped (they have
-no supporting base rows left). AVG is derived (sum/count) by readers.
+full-outer merge; groups whose maintained count reaches 0 are dropped
+(they have no supporting base rows left). AVG is derived (sum/count) by
+readers.
 
-DISTINCT-COUNT measures (``distincts=``) are stored as KMV theta sketches
-(``nd_<col>``: the k smallest distinct 52-bit portable hashes, sorted) —
-the warehouse pattern of keeping mergeable sketches inside the cube.
-Inserts fold exactly (KMV merge property); a retraction that could touch a
-sketch member falls into the same danger-group recompute as MIN/MAX below.
-Because the hash is engine-portable (md5 hex fold, q_theta_sketch's
-trick), a sketch-valued view is verifiable HASH-EXACT against a DuckDB
-oracle, and ``kmv_estimate`` turns a sketch into the distinct-count
-estimate (exact below k).
+Joins: inner join is bilinear over signed multisets, so with
+Ti_new = Ti_old + ΔTi the change of the chain telescopes into one term per
+table that moved:
+
+    Δ(T0 ⋈ … ⋈ Tn) = Σ_i  T0_old ⋈ … ⋈ T(i−1)_old
+                           ⋈ ΔTi ⋈
+                           T(i+1)_new ⋈ … ⋈ Tn_new
+
+Tables BEFORE the delta are read at their last-synced versions (rows they
+gained this window are claimed by their own terms), tables AFTER it at
+their new versions: every cross term ΔTi ⋈ ΔTj with i<j lives exactly once
+inside Tj_new's material content, so the expansion is exact for N:M joins
+and for same-window changes on any subset of tables. With one dim it is
+``ΔF ⋈ D_new + F_old ⋈ ΔD`` (two terms, not three); with no dims the one
+term is simply the change feed. Dim UPDATEs work because the CDF carries
+the preimage (−1, old attributes) and postimage (+1, new attributes) — the
+naive "re-join the fact delta only" maintenance silently serves stale dim
+attributes.
+
+Cost posture: fact-only movement (the common star-schema case) costs
+O(ΔF ⋈ dims) — its only term is ΔF ⋈ dims_new, no table precedes the fact,
+so the fact table itself is NEVER read, and AQE broadcasts the
+typically-small dims at runtime; a single-table view reads only its change
+feed. When dim i moved, the tables before it are scanned once,
+column-pruned to join keys + view columns, against the typically-tiny ΔTi
+(if several dims move in one window the old fact projection is scanned
+once per moved dim — deliberate: caching it would materialize an O(fact)
+intermediate, worse at scale than a second pruned columnar scan). Every
+view column must exist on exactly one table (validated at create time);
+each table contributes only its own join columns, the join columns of
+later dims it is the earliest provider of, and the view columns it owns
+(``selected`` in ``_mv_meta.json``).
 
 MIN/MAX (``mins=`` / ``maxs=``) use the standard recompute-on-retraction
 upgrade: inserts maintain them for free (new_min = least(stored, batch
 min)), but a retraction that TOUCHES the current extreme (retracted min <=
 stored min, or retracted max >= stored max) cannot be folded — the new
-extreme lives only in the base table. Exactly those DANGER groups are
-re-aggregated from the base's CURRENT snapshot via a semi join (columns
-pruned to keys + measure), so the refresh costs O(change rows) + O(base
-rows of groups whose extreme was retracted) — never an unconditional
-O(base). Asking for min/max through the legacy ``aggs=`` switch still
-raises, pointing at the explicit parameters, because the caller must opt
-into the retraction cost consciously.
+extreme lives only in the base tables. Exactly those DANGER groups are
+re-aggregated from the CURRENT chain via a semi join (columns pruned to
+join keys + view columns), so the refresh aggregates O(change rows) + O(rows
+of groups whose extreme was retracted), and a refresh without danger groups
+never reads the base. (With danger groups the pruned snapshots are still
+scanned once before the semi join.)
+Asking for min/max through the legacy ``aggs=`` switch still raises,
+pointing at the explicit parameters, because the caller must opt into the
+retraction cost consciously.
+
+DISTINCT-COUNT measures (``distincts=``) are stored as KMV theta sketches
+(``nd_<col>``: the k smallest distinct 52-bit portable hashes, sorted) —
+the warehouse pattern of keeping mergeable sketches inside the cube.
+Inserts fold exactly (KMV merge property); a retraction that could touch a
+sketch member falls into the same danger-group recompute as MIN/MAX.
+Because the hash is engine-portable (md5 hex fold, q_theta_sketch's
+trick), a sketch-valued view is verifiable HASH-EXACT against a DuckDB
+oracle, and ``kmv_estimate`` turns a sketch into the distinct-count
+estimate (exact below k).
 
 The view itself is stored as a versioned table, so MV readers get the same
 snapshot isolation / time travel as base-table readers, and every refresh is
 an atomic commit. Refreshes commit ``kind='merge'`` with REAL change files
 (insert / update pre+postimage / delete per changed group, staged with the
 view's data by ``_stage_mv_refresh`` — O(changed groups)), which makes a
-maintained view itself a change-feed SOURCE: another MV (or a join MV using
-it as the dim side) can chain off it, and base movement propagates down the
-chain with every hop O(changes). See test_mv_chain_mv_over_mv and
-test_join_mv_dim_is_itself_a_maintained_mv. ``_mv_meta.json`` (inside the MV directory, next to the
-manifests) records the definition and the last base version folded in —
-refresh is idempotent: re-running with no new base versions is a no-op.
+maintained view itself a change-feed SOURCE: another view (as its base or
+as a dim) can chain off it, and base movement propagates down the chain
+with every hop O(changes). See test_mv_chain_mv_over_mv and
+test_join_mv_dim_is_itself_a_maintained_mv. ``_mv_meta.json`` (inside the
+MV directory, next to the manifests) records the definition and, per
+table, the last version folded in — refresh is idempotent: re-running with
+no new versions is a no-op.
 
-Durability contract with vacuum: refresh only ever reads base CHANGE data in
-(last_synced, current]; older base versions can be vacuumed away without
-breaking refresh — asserted by test_mv_refresh_after_base_vacuum.
+Durability contract with vacuum: refresh reads CHANGE data only in
+(last_synced, current] of each table, so older versions can be vacuumed
+away without breaking refresh — asserted by
+test_mv_refresh_is_o_changes_survives_base_vacuum. The one exception is a
+view with dims: term i time-travels tables j<i to their last-synced
+versions, so vacuum retention on every table must cover its synced version
+while any LATER table has unfolded changes. A table whose window held only
+compactions is read at its current version instead (identical content).
+
+Race discipline: a refresh pins the MV version it folds ON TOP OF and
+commits exactly that version + 1, so of two refreshers racing over the
+same window exactly one wins the O_EXCL manifest create; the loser
+discards its staged fold and never retries against the new parent (that
+would fold the same window twice — double-counted sums).
 """
 
 from __future__ import annotations
@@ -89,9 +142,44 @@ def _meta_path(mv_path: str) -> str:
     return os.path.join(mv_path, _META)
 
 
+def _view_cols(sums, mins, maxs, distincts) -> list[str]:
+    """The source columns a view aggregates: sums first, then every other
+    extreme/sketch column once."""
+    return sums + [c for c in sorted({*mins, *maxs, *distincts}) if c not in sums]
+
+
 def _load_meta(mv_path: str) -> dict:
+    """The view's definition in the one chain shape (``paths``, ``ons``,
+    ``selected``, ``versions_synced``, ``mv_version`` plus the measures).
+    This is the one place that reads the two older on-disk shapes — a
+    single-table view (``base_path``/``base_version_synced``) and
+    ``kind: join_mv`` (``fact_path``/``dim_path``/``on``/``side``/
+    ``*_version_synced``) — so views written by them keep refreshing."""
     with open(_meta_path(mv_path), encoding="utf-8") as fh:
-        return json.load(fh)
+        meta = {"mins": [], "maxs": [], "distincts": [], "kmv_k": 128,
+                **json.load(fh)}
+    meta.pop("kind", None)
+    if "fact_path" in meta:
+        on = meta.pop("on")
+        meta["paths"] = [meta.pop("fact_path"), meta.pop("dim_path")]
+        meta["ons"] = [[], on]
+        meta["selected"] = [
+            on + [c for c, s in meta["side"].items() if s == which]
+            for which in ("fact", "dim")
+        ]
+        meta["versions_synced"] = [
+            meta.pop("fact_version_synced"), meta.pop("dim_version_synced")
+        ]
+    elif "base_path" in meta:
+        meta["paths"] = [meta.pop("base_path")]
+        meta["ons"] = [[]]
+        view_cols = _view_cols(
+            meta["sums"], meta["mins"], meta["maxs"], meta["distincts"]
+        )
+        meta["selected"] = [list(dict.fromkeys(meta["keys"] + view_cols))]
+        meta["versions_synced"] = [meta.pop("base_version_synced")]
+    meta.pop("side", None)
+    return meta
 
 
 def _save_meta(mv_path: str, meta: dict) -> None:
@@ -175,6 +263,79 @@ def kmv_estimate(col, k: int):
     )
 
 
+def _plan_columns(
+    colsets: list[set[str]],
+    paths: list[str],
+    ons: list[list[str]],
+    keys: list[str],
+    view_cols: list[str],
+) -> list[list[str]]:
+    """Validate the join chain and assign every view column a single owner.
+
+    Returns ``selected``: ``selected[i]`` is the column-pruned projection
+    table i contributes to every chain build — its own join columns, the
+    join columns of later dims it is the EARLIEST provider of, and the view
+    columns it owns. Raises on missing, ambiguous, or out-of-scope
+    columns."""
+    # each dim's join columns must be in scope before it joins
+    in_scope = set(colsets[0])
+    for i in range(1, len(paths)):
+        for c in ons[i]:
+            if c not in colsets[i]:
+                raise ValueError(
+                    f"join column {c!r} missing on table {i} ({paths[i]})"
+                )
+            if c not in in_scope:
+                raise ValueError(
+                    f"join column {c!r} of table {i} is provided by neither "
+                    "the fact nor an earlier dim — order dims so every join "
+                    "key is already in scope when its dim joins"
+                )
+        in_scope |= colsets[i]
+    all_on = {c for on in ons[1:] for c in on}
+    side: dict[str, int] = {}
+    for c in dict.fromkeys(keys + view_cols):  # ordered, deduped
+        if c in all_on:
+            raise ValueError(
+                f"column {c!r} is a join column; expose it for grouping "
+                "under a different name on the owning table"
+            )
+        owners = [i for i, cs in enumerate(colsets) if c in cs]
+        if len(owners) > 1:
+            raise ValueError(
+                f"column {c!r} exists on tables {owners} — ambiguous"
+            )
+        if not owners:
+            raise ValueError(f"column {c!r} exists on no table")
+        side[c] = owners[0]
+
+    def provider(c: str) -> int:
+        return min(i for i, cs in enumerate(colsets) if c in cs)
+
+    selected: list[list[str]] = []
+    for i in range(len(paths)):
+        cols = list(ons[i])  # the dim's own join keys ([] for the fact)
+        for j in range(i + 1, len(paths)):
+            cols += [c for c in ons[j] if provider(c) == i]
+        cols += [c for c, s in side.items() if s == i]
+        selected.append(list(dict.fromkeys(cols)))
+    return selected
+
+
+def _chain(frames: list[DataFrame], ons: list[list[str]]) -> DataFrame:
+    acc = frames[0]
+    for df, on in zip(frames[1:], ons[1:]):
+        acc = acc.join(df, on)
+    return acc
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def create_mv(
     spark: SparkSession,
     base_path: str,
@@ -186,11 +347,15 @@ def create_mv(
     maxs: list[str] | None = None,
     distincts: list[str] | None = None,
     kmv_k: int = 128,
+    dims: list[dict] | None = None,
 ) -> int:
     """Materialize ``SELECT keys, COUNT(*), SUM(sums...), MIN(mins...),
-    MAX(maxs...) GROUP BY keys`` over the base table's CURRENT version.
-    Returns the MV's committed version. ``mins``/``maxs`` opt into
-    recompute-on-retraction maintenance (see module docstring).
+    MAX(maxs...) FROM base JOIN dim1 USING (…) JOIN dim2 USING (…) …
+    GROUP BY keys`` over every table's CURRENT version. ``dims`` is an
+    ordered list of ``{"path": str, "on": [join cols]}`` (none: a
+    single-table view). Returns the MV's committed version.
+    ``mins``/``maxs`` opt into recompute-on-retraction maintenance (see
+    module docstring).
 
     ``distincts`` adds SKETCH-VALUED measures: per group, an ``nd_<col>``
     column holding a KMV theta sketch (the ``kmv_k`` smallest distinct
@@ -210,15 +375,24 @@ def create_mv(
                 "(min/max retraction needs the base table); use the explicit "
                 "mins=/maxs= parameters to opt into recompute-on-retraction"
             )
-    base_version = current_version(base_path)
-    if base_version == 0:
-        raise FileNotFoundError(f"no committed snapshot at {base_path}")
+    dims = list(dims or [])
+    paths = [base_path] + [d["path"] for d in dims]
+    ons: list[list[str]] = [[]] + [list(d["on"]) for d in dims]
     mins, maxs = list(mins or []), list(maxs or [])
     distincts = list(distincts or [])
-    base = read_snapshot(spark, base_path, base_version)
-    view = _aggregate(base, keys, sums, mins, maxs)
+    versions = [current_version(p) for p in paths]
+    for p, v in zip(paths, versions):
+        if v == 0:
+            raise FileNotFoundError(f"no committed snapshot at {p}")
+    snaps = [read_snapshot(spark, p, v) for p, v in zip(paths, versions)]
+    selected = _plan_columns(
+        [set(s.columns) for s in snaps], paths, ons, keys,
+        _view_cols(sums, mins, maxs, distincts),
+    )
+    joined = _chain([s.select(*c) for s, c in zip(snaps, selected)], ons)
+    view = _aggregate(joined, keys, sums, mins, maxs)
     for c in distincts:
-        sk = _kmv_sketch(base, keys, c, kmv_k, f"nd_{c}")
+        sk = _kmv_sketch(joined, keys, c, kmv_k, f"nd_{c}")
         view = view.join(sk, keys, "left").withColumn(
             f"nd_{c}", F.coalesce(F.col(f"nd_{c}"), _empty_sketch())
         )
@@ -226,14 +400,16 @@ def create_mv(
     _save_meta(
         mv_path,
         {
-            "base_path": os.path.abspath(base_path),
+            "paths": [os.path.abspath(p) for p in paths],
+            "ons": ons,
             "keys": keys,
             "sums": sums,
             "mins": mins,
             "maxs": maxs,
             "distincts": distincts,
             "kmv_k": kmv_k,
-            "base_version_synced": base_version,
+            "selected": selected,
+            "versions_synced": versions,
             "mv_version": v,
         },
     )
@@ -283,12 +459,7 @@ def _change_feed(
         )
     if physical:
         parts.append(spark.read.parquet(*physical).select(*columns, "_change_type"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union(parts) if parts else None
 
 
 def _stage_mv_refresh(
@@ -296,11 +467,10 @@ def _stage_mv_refresh(
 ) -> tuple[list[dict], list[dict]]:
     """ONE staging write for a refreshed view AND its own change feed: each
     merged row of the annotated ``full`` frame (mv_count, the ``_in_cur``/
-    ``_in_delta`` presence markers and ``_pre_*`` prior values — the refresh
-    merge shape shared by refresh_mv / refresh_star_mv / refresh_join_mv)
-    explodes into its file roles: an alive group is a data row; a new group
-    is an insert, a group whose measures moved an update pre/postimage pair,
-    an emptied group (count reached 0) a delete. Same CDF shape as
+    ``_in_delta`` presence markers and ``_pre_*`` prior values) explodes
+    into its file roles: an alive group is a data row; a new group is an
+    insert, a group whose measures moved an update pre/postimage pair, an
+    emptied group (count reached 0) a delete. Same CDF shape as
     merge_snapshot, O(changed groups) change rows — this is what makes a
     maintained view itself consumable by ANOTHER maintained view. The merge
     join executes once and staging is a single write job. Returns
@@ -337,16 +507,14 @@ def _stage_mv_refresh(
 
 
 def refresh_mv(spark: SparkSession, mv_path: str) -> int:
-    """Fold every base version committed since the last refresh into the
-    view. Cost is O(change rows), independent of base-table size. Returns
-    the MV version (unchanged if the base hasn't moved)."""
+    """Fold every version committed on ANY table of the view since the last
+    refresh into the view in one atomic commit — one telescoping term per
+    table that moved, each O(that table's changes ⋈ pruned others); a
+    single-table view reads only its change feed. Returns the MV version
+    (unchanged if nothing moved)."""
     meta = _load_meta(mv_path)
-    if meta.get("kind") == "join_mv":
-        raise ValueError(f"{mv_path} is a join MV; use refresh_join_mv()")
-    if meta.get("kind") == "star_mv":
-        raise ValueError(f"{mv_path} is a star MV; use refresh_star_mv()")
     # crash coherence: the meta records which MV version its
-    # base_version_synced belongs to. A crash between a refresh's snapshot
+    # versions_synced belong to. A crash between a refresh's snapshot
     # commit and its meta write leaves them out of step; folding the same
     # change window again would silently double-count, so refuse and ask for
     # a rebuild instead.
@@ -358,32 +526,56 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
             f"CURRENT is {current_version(mv_path)} — a prior refresh crashed "
             "between commit and meta write; rebuild with create_mv()"
         )
-    base_path, keys, sums = meta["base_path"], meta["keys"], meta["sums"]
-    mins, maxs = meta.get("mins", []), meta.get("maxs", [])
-    distincts = meta.get("distincts", [])
-    kmv_k = meta.get("kmv_k", 128)
-    lo, hi = meta["base_version_synced"], current_version(base_path)
-    if hi <= lo:
+    paths, ons, selected = meta["paths"], meta["ons"], meta["selected"]
+    keys, sums = meta["keys"], meta["sums"]
+    mins, maxs, distincts = meta["mins"], meta["maxs"], meta["distincts"]
+    kmv_k = meta["kmv_k"]
+    view_cols = _view_cols(sums, mins, maxs, distincts)
+    los = meta["versions_synced"]
+    his = [current_version(p) for p in paths]
+    if all(hi <= lo for lo, hi in zip(los, his)):
         return current_version(mv_path)
 
-    extreme_cols = sorted({*mins, *maxs})
-    measure_cols = sums + [
-        c for c in sorted({*extreme_cols, *distincts}) if c not in sums
+    feeds = [
+        _change_feed(spark, p, lo, hi, selected[i]) if hi > lo else None
+        for i, (p, lo, hi) in enumerate(zip(paths, los, his))
     ]
-    changes = _change_feed(spark, base_path, lo, hi, keys + measure_cols)
-    if changes is None:  # only compactions happened
-        meta["base_version_synced"] = hi
+    if all(f is None for f in feeds):  # only compactions happened
+        meta["versions_synced"] = his
         _save_meta(mv_path, meta)
         return current_version(mv_path)
+    # A table whose window held only compactions has identical content at
+    # los[j] and his[j] — advance its cursor so the old-prefix snapshot
+    # reads below target the CURRENT files (the pre-compaction version may
+    # have been vacuumed; its content is provably equal either way).
+    los = [hi if f is None else lo for f, lo, hi in zip(feeds, los, his)]
 
-    ins, ret = _sign() == 1, _sign() == -1
+    parts: list[DataFrame] = []
+    for i, feed in enumerate(feeds):
+        if feed is None:
+            continue
+        # term i: tables before the delta at their LAST-SYNCED versions,
+        # tables after it at their NEW versions (see module doc)
+        frames = [
+            feed.withColumn("s", _sign()).drop("_change_type")
+            if j == i
+            else read_snapshot(spark, p, los[j] if j < i else his[j]).select(
+                *selected[j]
+            )
+            for j, p in enumerate(paths)
+        ]
+        parts.append(
+            _chain(frames, ons).select(*dict.fromkeys(keys + view_cols), "s")
+        )
+    signed = _union(parts)
     if distincts:
-        # the change feed feeds BOTH the signed delta aggregate and the
-        # per-column insert sketches — materialize it once
-        changes = changes.localCheckpoint(eager=True)
-    delta = changes.groupBy(*keys).agg(
-        F.sum(_sign()).cast("long").alias("d_count"),
-        *[F.sum(_sign() * F.col(c)).alias(f"d_sum_{c}") for c in sums],
+        # the signed rows feed BOTH the delta aggregate and the per-column
+        # insert sketches — materialize them once
+        signed = signed.localCheckpoint(eager=True)
+    ins, ret = F.col("s") == 1, F.col("s") == -1
+    delta = signed.groupBy(*keys).agg(
+        F.sum("s").cast("long").alias("d_count"),
+        *[F.sum(F.col("s") * F.col(c)).alias(f"d_sum_{c}") for c in sums],
         # inserted-rows extremes fold in for free; retracted-rows extremes
         # only DETECT whether the stored extreme might be gone
         *[F.min(F.when(ins, F.col(c))).alias(f"d_insmin_{c}") for c in mins],
@@ -398,22 +590,17 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
         ],
     )
     # inserted-rows sketches: the k smallest distinct hashes among the
-    # batch's inserts, merged below (k-smallest of a union of k-smallest
+    # window's inserts, merged below (k-smallest of a union of k-smallest
     # sets IS the union's k-smallest — the KMV merge property)
     for c in distincts:
         delta = delta.join(
-            _kmv_sketch(
-                changes.filter(ins), keys, c, kmv_k, f"d_inssk_{c}"
-            ),
+            _kmv_sketch(signed.filter(ins), keys, c, kmv_k, f"d_inssk_{c}"),
             keys,
             "left",
         )
 
-    # Pin the MV version this refresh folds ON TOP OF. The commit below
-    # targets exactly cur_mv_version + 1, so of two refreshers racing over
-    # the same window exactly one wins the O_EXCL manifest create; the loser
-    # must NOT retry its commit against the new parent (that would fold the
-    # same change window twice — double-counted sums).
+    # Pin the MV version this refresh folds ON TOP OF (race discipline,
+    # module doc): the commit below targets exactly cur_mv_version + 1.
     cur_mv_version = current_version(mv_path)
     cur = read_snapshot(spark, mv_path, cur_mv_version)
     # danger = a retraction touched the stored extreme: the true new extreme
@@ -502,16 +689,23 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
         )
     )
 
-    if extreme_cols or distincts:
+    if mins or maxs or distincts:
+        # multi-consumer only here (danger probe + staging); otherwise the
+        # staging write is the sole consumer
         full = full.localCheckpoint(eager=True)
         danger_keys = full.filter(F.col("_danger")).select(*keys)
         if danger_keys.limit(1).count():
-            # ONLY the danger groups re-aggregate from the base — a single
-            # column-pruned scan semi-joined down to the affected keys.
-            need_cols = sorted({*extreme_cols, *distincts})
+            # ONLY the danger groups re-aggregate, from the CURRENT chain:
+            # every table's new snapshot, column-pruned, semi-joined down to
+            # the affected group keys before the aggregate.
+            need_cols = sorted({*mins, *maxs, *distincts})
+            frames = [
+                read_snapshot(spark, p, hv).select(*selected[j])
+                for j, (p, hv) in enumerate(zip(paths, his))
+            ]
             base_cur = (
-                read_snapshot(spark, base_path, hi)
-                .select(*keys, *need_cols)
+                _chain(frames, ons)
+                .select(*dict.fromkeys(keys + need_cols))
                 .join(F.broadcast(danger_keys), keys, "left_semi")
             )
             if distincts:
@@ -519,7 +713,7 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
                 # rebuild — materialize the pruned danger slice once
                 base_cur = base_cur.localCheckpoint(eager=True)
             recomputed = danger_keys
-            if extreme_cols:
+            if mins or maxs:
                 recomputed = recomputed.join(
                     base_cur.groupBy(*keys).agg(
                         *[F.min(c).alias(f"rc_min_{c}") for c in mins],
@@ -541,23 +735,11 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
                 *keys,
                 "mv_count",
                 *[f"sum_{c}" for c in sums],
-                *[
-                    F.when(F.col("_danger"), F.col(f"rc_min_{c}"))
-                    .otherwise(F.col(f"min_{c}"))
-                    .alias(f"min_{c}")
-                    for c in mins
-                ],
-                *[
-                    F.when(F.col("_danger"), F.col(f"rc_max_{c}"))
-                    .otherwise(F.col(f"max_{c}"))
-                    .alias(f"max_{c}")
-                    for c in maxs
-                ],
-                *[
-                    F.when(F.col("_danger"), F.col(f"rc_nd_{c}"))
-                    .otherwise(F.col(f"nd_{c}"))
-                    .alias(f"nd_{c}")
-                    for c in distincts
+                *[  # the min_/max_/nd_ measures
+                    F.when(F.col("_danger"), F.col(f"rc_{m}")).otherwise(
+                        F.col(m)
+                    ).alias(m)
+                    for m in measures[1 + len(sums):]
                 ],
                 "_in_cur",
                 "_in_delta",
@@ -590,14 +772,14 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
         # caller must rerun — the rerun either no-ops (meta landed) or trips
         # the crash-coherence refusal (winner died in the gap), both safe.
         fresh = _load_meta(mv_path)
-        if fresh["base_version_synced"] >= hi:
+        if all(sv >= hi for sv, hi in zip(fresh["versions_synced"], his)):
             return current_version(mv_path)
         raise RuntimeError(
             f"mv at {mv_path}: concurrent refresh detected (version "
             f"{cur_mv_version + 1} already committed by another refresher) — "
             "rerun refresh_mv()"
         ) from None
-    meta["base_version_synced"] = hi
+    meta["versions_synced"] = his
     meta["mv_version"] = v
     _save_meta(mv_path, meta)
     return v

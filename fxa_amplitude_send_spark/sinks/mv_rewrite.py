@@ -77,22 +77,22 @@ def _compatible(
     allow_stale: bool,
     distincts: list[str] = (),
 ) -> bool:
-    if meta.get("kind") in ("join_mv", "star_mv"):
-        return False  # join/star views answer joins, not single-base aggs
-    if meta.get("base_path") != os.path.abspath(base_path):
+    if len(meta["paths"]) != 1:
+        return False  # join views answer joins, not single-base aggs
+    if meta["paths"][0] != os.path.abspath(base_path):
         return False
-    if not set(keys) <= set(meta.get("keys", [])):
+    if not set(keys) <= set(meta["keys"]):
         return False
-    if not set(sums) <= set(meta.get("sums", [])):
+    if not set(sums) <= set(meta["sums"]):
         return False
-    if not set(mins) <= set(meta.get("mins", [])):
+    if not set(mins) <= set(meta["mins"]):
         return False
-    if not set(maxs) <= set(meta.get("maxs", [])):
+    if not set(maxs) <= set(meta["maxs"]):
         return False
-    if not set(distincts) <= set(meta.get("distincts", [])):
+    if not set(distincts) <= set(meta["distincts"]):
         return False
     if not allow_stale and not _fresh(
-        meta["base_path"], meta.get("base_version_synced", -1), base_current
+        meta["paths"][0], meta["versions_synced"][0], base_current
     ):
         return False
     return True
@@ -141,14 +141,14 @@ def answer_aggregate(
             allow_stale, distincts,
         ):
             continue
-        width = len(meta.get("keys", []))
+        width = len(meta["keys"])
         if chosen is None or width < chosen[0]:
             chosen = (width, p, meta)
 
     if chosen is not None:
         _, p, meta = chosen
         view = read_mv(spark, p)
-        k = meta.get("kmv_k", 128)
+        k = meta["kmv_k"]
         # roll the finer grouping up: COUNT is the SUM of partial counts,
         # SUM of partial SUMs, MIN of partial MINs, MAX of partial MAXs,
         # sketches the re-truncated union of partial sketches
@@ -255,7 +255,7 @@ def answer_grouping_sets(
             meta, base_path, keys, sums, mins, maxs, base_current, allow_stale
         ):
             continue
-        width = len(meta.get("keys", []))
+        width = len(meta["keys"])
         if chosen is None or width < chosen[0]:
             chosen = (width, p, meta)
 
@@ -322,35 +322,15 @@ def answer_grouping_sets(
     return out, None
 
 
-def _join_shape(meta: dict) -> set[tuple[str, tuple[str, ...]]] | None:
-    """A join/star view's join spec as an order-free multiset-of-tables
-    key: {(abspath, sorted on-cols), ...} with the fact keyed by on=().
+def _join_shape(meta: dict) -> set[tuple[str, tuple[str, ...]]]:
+    """A view's join spec as an order-free multiset-of-tables key:
+    {(abspath, sorted on-cols), ...} with the fact keyed by on=().
     Inner equi-join content is order-independent, so two specs with equal
     shapes materialize the same relation."""
-    if meta.get("kind") == "join_mv":
-        return {
-            (meta["fact_path"], ()),
-            (meta["dim_path"], tuple(sorted(meta["on"]))),
-        }
-    if meta.get("kind") == "star_mv":
-        shape = {(meta["paths"][0], ())}
-        for p, on in zip(meta["paths"][1:], meta["ons"][1:]):
-            shape.add((p, tuple(sorted(on))))
-        return shape
-    return None
+    return {(p, tuple(sorted(on))) for p, on in zip(meta["paths"], meta["ons"])}
 
 
 def _join_fresh(meta: dict) -> bool:
-    if meta.get("kind") == "join_mv":
-        return _fresh(
-            meta["fact_path"],
-            meta["fact_version_synced"],
-            current_version(meta["fact_path"]),
-        ) and _fresh(
-            meta["dim_path"],
-            meta["dim_version_synced"],
-            current_version(meta["dim_path"]),
-        )
     return all(
         _fresh(p, sv, current_version(p))
         for sv, p in zip(meta["versions_synced"], meta["paths"])
@@ -395,9 +375,9 @@ def answer_join_aggregate(
             continue
         if not set(sums) <= set(meta["sums"]):
             continue
-        if not set(mins) <= set(meta.get("mins", [])):
+        if not set(mins) <= set(meta["mins"]):
             continue
-        if not set(maxs) <= set(meta.get("maxs", [])):
+        if not set(maxs) <= set(meta["maxs"]):
             continue
         if not allow_stale and not _join_fresh(meta):
             continue

@@ -1,4 +1,5 @@
-"""Incrementally maintained JOIN views (sinks/join_mv.py): the two-term
+"""Incrementally maintained JOIN views (sinks/materialized_view.py with
+one dim): the two-term
 signed delta expansion (ΔF ⋈ D_new + F_old ⋈ ΔD) must keep the view equal
 to a from-scratch fact⋈dim recompute after any interleaving of fact
 appends/deletes and dim merges/deletes — including dim attribute updates,
@@ -9,12 +10,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from fxa_amplitude_send_spark.sinks.join_mv import (
-    create_join_mv,
-    read_join_mv,
-    refresh_join_mv,
+from fxa_amplitude_send_spark.sinks.materialized_view import (
+    create_mv,
+    read_mv,
+    refresh_mv,
 )
-from fxa_amplitude_send_spark.sinks.materialized_view import refresh_mv
 from fxa_amplitude_send_spark.sinks.versioned import (
     append_snapshot,
     delete_snapshot,
@@ -66,24 +66,24 @@ def _setup(spark, fact, dim, tmp_path, fact_pred="o_orderkey % 2 = 0"):
     fp, dp, mv = str(tmp_path / "f"), str(tmp_path / "d"), str(tmp_path / "mv")
     write_snapshot(fact.filter(fact_pred), fp)
     write_snapshot(dim, dp)
-    create_join_mv(
-        spark, fp, dp, mv,
-        on=["custkey"], keys=["c_mktsegment"], sums=["o_totalprice"],
+    create_mv(
+        spark, fp, mv, keys=["c_mktsegment"], sums=["o_totalprice"],
+        dims=[{"path": dp, "on": ["custkey"]}],
     )
     return fp, dp, mv
 
 
 def test_join_mv_create_matches_recompute(spark, fact, dim, tmp_path):
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_fact_append_never_scans_fact(spark, fact, dim, tmp_path):
     """Fact-only movement folds via ΔF ⋈ dim and matches a recompute."""
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
-    refresh_join_mv(spark, mv)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_fact_only_refresh_never_reads_fact(
@@ -92,7 +92,7 @@ def test_join_mv_fact_only_refresh_never_reads_fact(
     """The O(ΔF ⋈ dim) claim, pinned: when only the fact moved, refresh
     must never time-travel-read the fact table — only the dim's current
     snapshot and the stored view."""
-    import fxa_amplitude_send_spark.sinks.join_mv as jmv
+    import fxa_amplitude_send_spark.sinks.materialized_view as jmv
 
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
@@ -104,16 +104,16 @@ def test_join_mv_fact_only_refresh_never_reads_fact(
             read_paths.append(path), real(spark, path, version)
         )[1],
     )
-    refresh_join_mv(spark, mv)
+    refresh_mv(spark, mv)
     assert fp not in read_paths
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_fact_delete_retracts(spark, fact, dim, tmp_path):
     fp, dp, mv = _setup(spark, fact, dim, tmp_path, fact_pred="true")
     delete_snapshot(spark, fp, "o_totalprice > 100000")
-    refresh_join_mv(spark, mv)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_dim_update_rewrites_groups(spark, fact, dim, tmp_path):
@@ -128,8 +128,8 @@ def test_join_mv_dim_update_rewrites_groups(spark, fact, dim, tmp_path):
         .withColumn("c_mktsegment", F.lit("REZONED"))
     )
     merge_snapshot(spark, dp, moved, ["custkey"])
-    refresh_join_mv(spark, mv)
-    got = _as_map(read_join_mv(spark, mv))
+    refresh_mv(spark, mv)
+    got = _as_map(read_mv(spark, mv))
     assert got == _recompute(spark, fp, dp)
     assert "BUILDING" not in got and "REZONED" in got
 
@@ -137,8 +137,8 @@ def test_join_mv_dim_update_rewrites_groups(spark, fact, dim, tmp_path):
 def test_join_mv_dim_delete_drops_joined_rows(spark, fact, dim, tmp_path):
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
     delete_snapshot(spark, dp, "c_mktsegment = 'MACHINERY'")
-    refresh_join_mv(spark, mv)
-    got = _as_map(read_join_mv(spark, mv))
+    refresh_mv(spark, mv)
+    got = _as_map(read_mv(spark, mv))
     assert got == _recompute(spark, fp, dp)
     assert "MACHINERY" not in got
 
@@ -156,20 +156,20 @@ def test_join_mv_both_sides_move_in_one_window(spark, fact, dim, tmp_path):
     )
     merge_snapshot(spark, dp, moved, ["custkey"])
     delete_snapshot(spark, dp, "c_mktsegment = 'FURNITURE'")
-    refresh_join_mv(spark, mv)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_refresh_is_idempotent_noop(spark, fact, dim, tmp_path):
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
-    v1 = refresh_join_mv(spark, mv)  # nothing moved
-    assert refresh_join_mv(spark, mv) == v1
-    before = _as_map(read_join_mv(spark, mv))
+    v1 = refresh_mv(spark, mv)  # nothing moved
+    assert refresh_mv(spark, mv) == v1
+    before = _as_map(read_mv(spark, mv))
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
-    v2 = refresh_join_mv(spark, mv)
+    v2 = refresh_mv(spark, mv)
     assert v2 == v1 + 1
-    assert refresh_join_mv(spark, mv) == v2  # second fold is a no-op
-    assert _as_map(read_join_mv(spark, mv)) != before
+    assert refresh_mv(spark, mv) == v2  # second fold is a no-op
+    assert _as_map(read_mv(spark, mv)) != before
 
 
 def test_join_mv_replace_commit_refused(spark, fact, dim, tmp_path):
@@ -178,20 +178,21 @@ def test_join_mv_replace_commit_refused(spark, fact, dim, tmp_path):
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
     write_snapshot(read_snapshot(spark, dp).limit(10), dp)  # replace
     with pytest.raises(RuntimeError, match="REPLACE"):
-        refresh_join_mv(spark, mv)
-
-
-def test_join_mv_wrong_refresher_refused(spark, fact, dim, tmp_path):
-    fp, dp, mv = _setup(spark, fact, dim, tmp_path)
-    with pytest.raises(ValueError, match="refresh_join_mv"):
         refresh_mv(spark, mv)
+
+
+def test_join_mv_refresh_mv_folds_join_view(spark, fact, dim, tmp_path):
+    fp, dp, mv = _setup(spark, fact, dim, tmp_path)
+    append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_streaming_triggered_refresh(spark, fact, dim, tmp_path):
     """Dim CDF stream -> join-view loop: a streaming reader tails the DIM
     table's change feed and each micro-batch triggers an incremental
     join-MV refresh — the streaming flavor of slowly-changing-dimension
-    propagation. refresh_join_mv's two version cursors keep the trigger
+    propagation. refresh_mv's per-table version cursors keep the trigger
     idempotent."""
     from fxa_amplitude_send_spark.sinks.versioned import current_version
     from fxa_amplitude_send_spark.sources.versioned_stream import (
@@ -214,7 +215,7 @@ def test_join_mv_streaming_triggered_refresh(spark, fact, dim, tmp_path):
     refreshes: list[int] = []
 
     def on_batch(batch_df, batch_id):
-        refreshes.append(refresh_join_mv(batch_df.sparkSession, mv))
+        refreshes.append(refresh_mv(batch_df.sparkSession, mv))
 
     q = (
         spark.readStream.format("versioned_table")
@@ -229,9 +230,9 @@ def test_join_mv_streaming_triggered_refresh(spark, fact, dim, tmp_path):
     q.stop()
 
     assert refreshes, "stream delivered no batches"
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
     v = current_version(mv)
-    assert refresh_join_mv(spark, mv) == v
+    assert refresh_mv(spark, mv) == v
 
 
 def test_join_mv_dim_is_itself_a_maintained_mv(spark, tmp_path, sf_smoke):
@@ -256,15 +257,15 @@ def test_join_mv_dim_is_itself_a_maintained_mv(spark, tmp_path, sf_smoke):
     write_snapshot(
         ev.withColumn("fbucket", F.col("event_id") % 3).drop("value"), fp
     )
-    create_join_mv(
-        spark, fp, dmv, jmv,
-        on=["event_type"], keys=["fbucket"], sums=["sum_value"],
+    create_mv(
+        spark, fp, jmv, keys=["fbucket"], sums=["sum_value"],
+        dims=[{"path": dmv, "on": ["event_type"]}],
     )
 
     def jmv_map():
         return {
             r["fbucket"]: (r["mv_count"], round(r["sum_sum_value"], 4))
-            for r in read_join_mv(spark, jmv).collect()
+            for r in read_mv(spark, jmv).collect()
         }
 
     def jmv_recompute():
@@ -287,7 +288,7 @@ def test_join_mv_dim_is_itself_a_maintained_mv(spark, tmp_path, sf_smoke):
     append_snapshot(ev.filter("event_id >= 60 AND event_id < 140"), base)
     delete_snapshot(spark, base, "event_type = 'error'")
     refresh_mv(spark, dmv)
-    refresh_join_mv(spark, jmv)
+    refresh_mv(spark, jmv)
     assert jmv_map() == jmv_recompute()
 
 
@@ -296,15 +297,15 @@ def test_join_mv_side_validation(spark, fact, dim, tmp_path):
     write_snapshot(fact, fp)
     write_snapshot(dim, dp)
     mv = str(tmp_path / "mv")
-    with pytest.raises(ValueError, match="neither side"):
-        create_join_mv(spark, fp, dp, mv, on=["custkey"],
-                       keys=["nope"], sums=["o_totalprice"])
+    with pytest.raises(ValueError, match="no table"):
+        create_mv(spark, fp, mv, keys=["nope"], sums=["o_totalprice"],
+                  dims=[{"path": dp, "on": ["custkey"]}])
     with pytest.raises(ValueError, match="join column"):
-        create_join_mv(spark, fp, dp, mv, on=["o_orderkey"],
-                       keys=["c_mktsegment"], sums=["o_totalprice"])
+        create_mv(spark, fp, mv, keys=["c_mktsegment"], sums=["o_totalprice"],
+                  dims=[{"path": dp, "on": ["o_orderkey"]}])
     with pytest.raises(ValueError, match="is a join column"):
-        create_join_mv(spark, fp, dp, mv, on=["custkey"],
-                       keys=["custkey"], sums=["o_totalprice"])
+        create_mv(spark, fp, mv, keys=["custkey"], sums=["o_totalprice"],
+                  dims=[{"path": dp, "on": ["custkey"]}])
 
 
 def test_join_mv_fact_compaction_then_vacuum_does_not_break_dim_term(
@@ -328,8 +329,8 @@ def test_join_mv_fact_compaction_then_vacuum_does_not_break_dim_term(
         .withColumn("c_mktsegment", F.lit("REZONED"))
     )
     merge_snapshot(spark, dp, moved, ["custkey"])
-    refresh_join_mv(spark, mv)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_mor_deletes_on_both_sides(spark, fact, dim, tmp_path):
@@ -340,11 +341,11 @@ def test_join_mv_mor_deletes_on_both_sides(spark, fact, dim, tmp_path):
 
     fp, dp, mv = _setup(spark, fact, dim, tmp_path)
     delete_snapshot_mor(spark, fp, "o_totalprice > 150000")
-    refresh_join_mv(spark, mv)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
     delete_snapshot_mor(spark, dp, "custkey % 5 = 2")
-    refresh_join_mv(spark, mv)
-    assert _as_map(read_join_mv(spark, mv)) == _recompute(spark, fp, dp)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)
 
 
 def test_join_mv_mor_merge_moves_groups(spark, fact, dim, tmp_path):
@@ -360,7 +361,40 @@ def test_join_mv_mor_merge_moves_groups(spark, fact, dim, tmp_path):
         .withColumn("c_mktsegment", F.lit("MOR_MOVED"))
     )
     merge_snapshot_mor(spark, dp, moved, ["custkey"])
-    refresh_join_mv(spark, mv)
-    got = _as_map(read_join_mv(spark, mv))
+    refresh_mv(spark, mv)
+    got = _as_map(read_mv(spark, mv))
     assert got == _recompute(spark, fp, dp)
     assert "MOR_MOVED" in got
+
+
+def test_join_mv_refreshes_legacy_join_meta(spark, fact, dim, tmp_path):
+    """A view whose _mv_meta.json still has the ``kind: join_mv`` shape
+    (fact_path / dim_path / on / side / *_version_synced) keeps
+    refreshing, with both sides moving in the window."""
+    import json
+    import os
+
+    fp, dp, mv = _setup(spark, fact, dim, tmp_path)
+    legacy = {
+        "kind": "join_mv",
+        "fact_path": os.path.abspath(fp),
+        "dim_path": os.path.abspath(dp),
+        "on": ["custkey"],
+        "keys": ["c_mktsegment"],
+        "sums": ["o_totalprice"],
+        "side": {"c_mktsegment": "dim", "o_totalprice": "fact"},
+        "fact_version_synced": 1,
+        "dim_version_synced": 1,
+        "mv_version": 1,
+    }
+    with open(os.path.join(mv, "_mv_meta.json"), "w", encoding="utf-8") as fh:
+        json.dump(legacy, fh, indent=1, sort_keys=True)
+    append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
+    moved = (
+        read_snapshot(spark, dp)
+        .filter("c_mktsegment = 'BUILDING'")
+        .withColumn("c_mktsegment", F.lit("REZONED"))
+    )
+    merge_snapshot(spark, dp, moved, ["custkey"])
+    assert refresh_mv(spark, mv) == 2
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, dp)

@@ -537,3 +537,73 @@ def test_mv_legacy_aggs_minmax_still_refused_with_pointer(spark, ev, tmp_path):
     write_snapshot(ev.filter("event_id < 10"), base)
     with pytest.raises(ValueError, match="mins=/maxs="):
         create_mv(spark, base, mv, keys=["event_type"], sums=[], aggs=["max"])
+
+
+def test_mv_refreshes_legacy_single_table_meta(spark, ev, tmp_path):
+    """A view whose _mv_meta.json still has the single-table shape
+    (base_path / base_version_synced) keeps refreshing."""
+    import json
+
+    base, mv = str(tmp_path / "b"), str(tmp_path / "mv")
+    write_snapshot(ev.filter("event_id % 3 = 0"), base)
+    create_mv(spark, base, mv, keys=["event_type"], sums=["value"],
+              mins=["value"])
+    legacy = {
+        "base_path": os.path.abspath(base),
+        "keys": ["event_type"],
+        "sums": ["value"],
+        "mins": ["value"],
+        "maxs": [],
+        "distincts": [],
+        "kmv_k": 128,
+        "base_version_synced": 1,
+        "mv_version": 1,
+    }
+    with open(os.path.join(mv, "_mv_meta.json"), "w", encoding="utf-8") as fh:
+        json.dump(legacy, fh, indent=1, sort_keys=True)
+    append_snapshot(ev.filter("event_id % 3 = 1"), base)
+    assert refresh_mv(spark, mv) == 2
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, base)
+
+
+def test_mv_minmax_distinct_view_pinned(spark, tmp_path):
+    """Columns and rows of a single-table view with MIN, MAX and a KMV
+    sketch, after create and after one refresh folding an append and a
+    delete that retracts an extreme (danger recompute) and empties a
+    group. The values are pinned: the same inputs must always produce
+    exactly this view."""
+    base, mv = str(tmp_path / "b"), str(tmp_path / "mv")
+    schema = "grp string, v bigint, u bigint"
+    write_snapshot(
+        spark.createDataFrame(
+            [("a", 1, 10), ("a", 5, 11), ("a", 3, 10), ("b", 7, 12),
+             ("b", 2, 13), ("c", 4, 14)],
+            schema,
+        ),
+        base,
+    )
+    create_mv(spark, base, mv, keys=["grp"], sums=["v"], mins=["v"],
+              maxs=["v"], distincts=["u"], kmv_k=2)
+    cols = ["grp", "mv_count", "sum_v", "min_v", "max_v", "nd_u"]
+
+    def rows():
+        return sorted(tuple(r) for r in read_mv(spark, mv).collect())
+
+    assert read_mv(spark, mv).columns == cols
+    assert rows() == [
+        ("a", 3, 9, 1, 5, [1778098546515114, 3726881744497220]),
+        ("b", 2, 9, 2, 7, [3413628421602967, 3467646016950858]),
+        ("c", 1, 4, 4, 4, [3002981952924620]),
+    ]
+    append_snapshot(
+        spark.createDataFrame([("a", 0, 15), ("b", 9, 16), ("d", 6, 17)], schema),
+        base,
+    )
+    delete_snapshot(spark, base, "v = 5 OR grp = 'c'")
+    refresh_mv(spark, mv)
+    assert read_mv(spark, mv).columns == cols
+    assert rows() == [
+        ("a", 3, 4, 0, 3, [2743495320077865, 3726881744497220]),
+        ("b", 3, 18, 2, 9, [3413628421602967, 3467646016950858]),
+        ("d", 1, 6, 6, 6, [1986808702081800]),
+    ]

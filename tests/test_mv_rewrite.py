@@ -212,16 +212,15 @@ def test_rewrite_join_and_star_views_are_not_candidates(
 ):
     """A join/star view over the same base must never answer a single-base
     aggregate (its rows are join results, not base rows)."""
-    from fxa_amplitude_send_spark.sinks.join_mv import create_join_mv
 
     dim = load_table(spark, sf_smoke, "events").select(
         "event_type", F.lit(1).alias("one")
     ).distinct()
     dp, jp = str(tmp_path / "dim"), str(tmp_path / "join")
     write_snapshot(dim, dp)
-    create_join_mv(
-        spark, base, dp, jp,
-        on=["event_type"], keys=["bucket"], sums=["value_c"],
+    create_mv(
+        spark, base, jp, keys=["bucket"], sums=["value_c"],
+        dims=[{"path": dp, "on": ["event_type"]}],
     )
     out, src = answer_aggregate(
         spark, base, keys=["bucket"], sums=["value_c"], mv_paths=[jp],
@@ -234,8 +233,6 @@ def test_rewrite_join_and_star_views_are_not_candidates(
 
 @pytest.fixture()
 def star_tables(spark, sf_smoke, tmp_path):
-    from fxa_amplitude_send_spark.sinks.star_mv import create_star_mv
-
     orders = load_table(spark, sf_smoke, "orders").select(
         "o_orderkey",
         F.col("o_custkey").alias("custkey"),
@@ -256,10 +253,9 @@ def star_tables(spark, sf_smoke, tmp_path):
     write_snapshot(cust, cp)
     write_snapshot(nation, np_)
     smv = str(tmp_path / "smv")
-    create_star_mv(
-        spark, fp,
-        [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
-        smv, keys=["n_name", "c_mktsegment"], sums=["price_c"],
+    create_mv(
+        spark, fp, smv, keys=["n_name", "c_mktsegment"], sums=["price_c"],
+        dims=[{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
     )
     return fp, cp, np_, smv
 
@@ -344,7 +340,6 @@ def test_join_rewrite_order_free_but_shape_exact(spark, star_tables):
 
 def test_join_rewrite_skips_stale_until_refreshed(spark, star_tables):
     from fxa_amplitude_send_spark.sinks.mv_rewrite import answer_join_aggregate
-    from fxa_amplitude_send_spark.sinks.star_mv import refresh_star_mv
     from fxa_amplitude_send_spark.sinks.versioned import read_snapshot
 
     fp, cp, np_, smv = star_tables
@@ -357,7 +352,7 @@ def test_join_rewrite_skips_stale_until_refreshed(spark, star_tables):
     expect = _join_expect(spark, fp, cp, np_, ["n_name"])
     got = {r["n_name"]: (r["mv_count"], r["sum_price_c"]) for r in out.collect()}
     assert got == {k[0]: v for k, v in expect.items()}
-    refresh_star_mv(spark, smv)
+    refresh_mv(spark, smv)
     out2, src2 = answer_join_aggregate(
         spark, fp, dims, keys=["n_name"], sums=["price_c"], mv_paths=[smv],
     )
@@ -407,7 +402,6 @@ def test_join_rewrite_minmax_rollup_and_subsumption(spark, sf_smoke, tmp_path):
     aggregate by extreme roll-up; a request for an uncovered extreme
     column falls back."""
     from fxa_amplitude_send_spark.sinks.mv_rewrite import answer_join_aggregate
-    from fxa_amplitude_send_spark.sinks.star_mv import create_star_mv
     from fxa_amplitude_send_spark.sinks.versioned import read_snapshot
 
     orders = load_table(spark, sf_smoke, "orders").select(
@@ -423,10 +417,10 @@ def test_join_rewrite_minmax_rollup_and_subsumption(spark, sf_smoke, tmp_path):
     )
     write_snapshot(orders, fp)
     write_snapshot(cust, dp)
-    create_star_mv(
-        spark, fp, [{"path": dp, "on": ["custkey"]}], smv,
-        keys=["c_mktsegment", "obucket"], sums=[],
+    create_mv(
+        spark, fp, smv, keys=["c_mktsegment", "obucket"], sums=[],
         mins=["o_totalprice"], maxs=["o_totalprice"],
+        dims=[{"path": dp, "on": ["custkey"]}],
     )
     dims = [{"path": dp, "on": ["custkey"]}]
     out, src = answer_join_aggregate(

@@ -1,4 +1,5 @@
-"""Snowflake/star incrementally maintained join views (sinks/star_mv.py):
+"""Snowflake/star incrementally maintained join views
+(sinks/materialized_view.py with several dims):
 the telescoping signed delta expansion
 Σ_i T0_old ⋈ … ⋈ T(i−1)_old ⋈ ΔTi ⋈ T(i+1)_new ⋈ … ⋈ Tn_new must keep the
 view equal to a from-scratch fact ⋈ dim1 ⋈ dim2 recompute after any
@@ -11,11 +12,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from fxa_amplitude_send_spark.sinks.materialized_view import refresh_mv
-from fxa_amplitude_send_spark.sinks.star_mv import (
-    create_star_mv,
-    read_star_mv,
-    refresh_star_mv,
+from fxa_amplitude_send_spark.sinks.materialized_view import (
+    create_mv,
+    read_mv,
+    refresh_mv,
 )
 from fxa_amplitude_send_spark.sinks.versioned import (
     append_snapshot,
@@ -83,17 +83,16 @@ def _setup(spark, fact, cust, nation, tmp_path, fact_pred="o_orderkey % 2 = 0"):
     write_snapshot(fact.filter(fact_pred), fp)
     write_snapshot(cust, cp)
     write_snapshot(nation, np_)
-    create_star_mv(
-        spark, fp,
-        [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
-        mv, keys=["n_name"], sums=["o_totalprice"],
+    create_mv(
+        spark, fp, mv, keys=["n_name"], sums=["o_totalprice"],
+        dims=[{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
     )
     return fp, cp, np_, mv
 
 
 def test_star_mv_create_matches_recompute(spark, fact, cust, nation, tmp_path):
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
-    assert _as_map(read_star_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_fact_only_refresh_never_reads_fact(
@@ -102,7 +101,7 @@ def test_star_mv_fact_only_refresh_never_reads_fact(
     """The O(ΔF ⋈ dims) claim, pinned: when only the fact moved, refresh
     must never time-travel-read the fact — only the dims' new snapshots
     and the stored view."""
-    import fxa_amplitude_send_spark.sinks.star_mv as smv
+    import fxa_amplitude_send_spark.sinks.materialized_view as smv
 
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
@@ -114,17 +113,17 @@ def test_star_mv_fact_only_refresh_never_reads_fact(
             read_paths.append(path), real(spark, path, version)
         )[1],
     )
-    refresh_star_mv(spark, mv)
+    refresh_mv(spark, mv)
     assert fp not in read_paths
-    assert _as_map(read_star_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_fact_delete_retracts(spark, fact, cust, nation, tmp_path):
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path,
                              fact_pred="true")
     delete_snapshot(spark, fp, "o_totalprice > 100000")
-    refresh_star_mv(spark, mv)
-    assert _as_map(read_star_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_outer_dim_rename_rewrites_groups(
@@ -140,8 +139,8 @@ def test_star_mv_outer_dim_rename_rewrites_groups(
         .withColumn("n_name", F.concat(F.lit("Z_"), F.col("n_name")))
     )
     merge_snapshot(spark, np_, renamed, ["nationkey"])
-    refresh_star_mv(spark, mv)
-    got = _as_map(read_star_mv(spark, mv))
+    refresh_mv(spark, mv)
+    got = _as_map(read_mv(spark, mv))
     assert got == _recompute(spark, fp, cp, np_)
     assert any(k.startswith("Z_") for k in got)
 
@@ -159,8 +158,8 @@ def test_star_mv_middle_dim_rekey_moves_rows_between_outer_groups(
         .withColumn("nationkey", F.lit(0))
     )
     merge_snapshot(spark, cp, migrated, ["custkey"])
-    refresh_star_mv(spark, mv)
-    assert _as_map(read_star_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_all_three_tables_move_in_one_window(
@@ -184,45 +183,42 @@ def test_star_mv_all_three_tables_move_in_one_window(
     )
     merge_snapshot(spark, np_, renamed, ["nationkey"])
     delete_snapshot(spark, np_, "nationkey >= 20")
-    refresh_star_mv(spark, mv)
-    got = _as_map(read_star_mv(spark, mv))
+    refresh_mv(spark, mv)
+    got = _as_map(read_mv(spark, mv))
     assert got == _recompute(spark, fp, cp, np_)
     assert "MERGED_BLOC" in got
 
 
 def test_star_mv_refresh_is_idempotent_noop(spark, fact, cust, nation, tmp_path):
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
-    v1 = refresh_star_mv(spark, mv)  # nothing moved
-    assert refresh_star_mv(spark, mv) == v1
+    v1 = refresh_mv(spark, mv)  # nothing moved
+    assert refresh_mv(spark, mv) == v1
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
-    v2 = refresh_star_mv(spark, mv)
+    v2 = refresh_mv(spark, mv)
     assert v2 == v1 + 1
-    assert refresh_star_mv(spark, mv) == v2  # second fold is a no-op
+    assert refresh_mv(spark, mv) == v2  # second fold is a no-op
 
 
 def test_star_mv_replace_commit_refused(spark, fact, cust, nation, tmp_path):
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
     write_snapshot(read_snapshot(spark, cp).limit(10), cp)  # full replace
     with pytest.raises(RuntimeError, match="REPLACE"):
-        refresh_star_mv(spark, mv)
-
-
-def test_star_mv_wrong_refresher_refused(spark, fact, cust, nation, tmp_path):
-    fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
-    with pytest.raises(ValueError, match="refresh_star_mv"):
         refresh_mv(spark, mv)
+
+
+def test_star_mv_refresh_mv_folds_star_view(spark, fact, cust, nation, tmp_path):
+    fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
+    append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
+    delete_snapshot(spark, np_, "nationkey >= 20")
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_is_chainable_cdf_source(spark, fact, cust, nation, tmp_path):
     """A star view's refresh commits kind='merge' with real change files,
     so a downstream plain MV can aggregate the star view incrementally."""
-    from fxa_amplitude_send_spark.sinks.materialized_view import (
-        create_mv,
-        read_mv,
-    )
-
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
-    refresh_star_mv(spark, mv)  # no-op refresh; keep the cursor exercised
+    refresh_mv(spark, mv)  # no-op refresh; keep the cursor exercised
     top = str(tmp_path / "top")
     create_mv(
         spark, mv, top,
@@ -230,7 +226,7 @@ def test_star_mv_is_chainable_cdf_source(spark, fact, cust, nation, tmp_path):
     )
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
     delete_snapshot(spark, np_, "nationkey >= 15")
-    refresh_star_mv(spark, mv)  # updates + deletes flow out as CDF rows
+    refresh_mv(spark, mv)  # updates + deletes flow out as CDF rows
     refresh_mv(spark, top)
     expect = _recompute(spark, fp, cp, np_)
     got = {
@@ -253,19 +249,18 @@ def test_star_mv_column_plan_validation(spark, fact, cust, nation, tmp_path):
         {"path": np_, "on": ["nationkey"]},
     ]
     with pytest.raises(ValueError, match="no table"):
-        create_star_mv(spark, fp, dims_ok, mv, keys=["nope"],
-                       sums=["o_totalprice"])
+        create_mv(spark, fp, mv, keys=["nope"], sums=["o_totalprice"],
+                  dims=dims_ok)
     with pytest.raises(ValueError, match="is a join column"):
-        create_star_mv(spark, fp, dims_ok, mv, keys=["nationkey"],
-                       sums=["o_totalprice"])
+        create_mv(spark, fp, mv, keys=["nationkey"], sums=["o_totalprice"],
+                  dims=dims_ok)
     # nation joins on nationkey, which only customer provides: listing
     # nation FIRST puts its join key out of scope
     with pytest.raises(ValueError, match="already in scope"):
-        create_star_mv(
-            spark, fp,
-            [{"path": np_, "on": ["nationkey"]},
-             {"path": cp, "on": ["custkey"]}],
-            mv, keys=["n_name"], sums=["o_totalprice"],
+        create_mv(
+            spark, fp, mv, keys=["n_name"], sums=["o_totalprice"],
+            dims=[{"path": np_, "on": ["nationkey"]},
+                  {"path": cp, "on": ["custkey"]}],
         )
 
 
@@ -286,8 +281,8 @@ def test_star_mv_fact_compaction_then_vacuum_does_not_break_dim_term(
     compact_snapshot(spark, fp, target_files=2)   # fact v2, content == v1
     vacuum(fp, retain_versions=1, grace_seconds=0.0, allow_unsafe_grace=True)                 # v1 files+manifest gone
     delete_snapshot(spark, np_, "nationkey >= 20")
-    refresh_star_mv(spark, mv)
-    assert _as_map(read_star_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
+    refresh_mv(spark, mv)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_vacuumed_change_window_refused(
@@ -303,7 +298,7 @@ def test_star_mv_vacuumed_change_window_refused(
     delete_snapshot(spark, fp, "o_totalprice > 150000")     # v3 (data)
     vacuum(fp, retain_versions=1, grace_seconds=0.0, allow_unsafe_grace=True)
     with pytest.raises(RuntimeError, match="vacuumed"):
-        refresh_star_mv(spark, mv)
+        refresh_mv(spark, mv)
 
 
 def _mm_map(df):
@@ -342,18 +337,17 @@ def test_star_mv_minmax_insert_fold_and_retraction_recompute(
     write_snapshot(fact.filter("o_orderkey % 2 = 0"), fp)
     write_snapshot(cust, cp)
     write_snapshot(nation, np_)
-    create_star_mv(
-        spark, fp,
-        [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
-        mv, keys=["n_name"], sums=[],
+    create_mv(
+        spark, fp, mv, keys=["n_name"], sums=[],
         mins=["o_totalprice"], maxs=["o_totalprice"],
+        dims=[{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
     )
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)  # insert fold
-    refresh_star_mv(spark, mv)
-    assert _mm_map(read_star_mv(spark, mv)) == _mm_recompute(spark, fp, cp, np_)
+    refresh_mv(spark, mv)
+    assert _mm_map(read_mv(spark, mv)) == _mm_recompute(spark, fp, cp, np_)
     delete_snapshot(spark, fp, "o_totalprice > 150000")     # retract maxes
-    refresh_star_mv(spark, mv)
-    assert _mm_map(read_star_mv(spark, mv)) == _mm_recompute(spark, fp, cp, np_)
+    refresh_mv(spark, mv)
+    assert _mm_map(read_mv(spark, mv)) == _mm_recompute(spark, fp, cp, np_)
 
 
 def test_star_mv_minmax_dim_rekey_migrates_extremes(
@@ -370,11 +364,10 @@ def test_star_mv_minmax_dim_rekey_migrates_extremes(
     write_snapshot(fact, fp)
     write_snapshot(cust, cp)
     write_snapshot(nation, np_)
-    create_star_mv(
-        spark, fp,
-        [{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
-        mv, keys=["n_name"], sums=["o_totalprice"],
+    create_mv(
+        spark, fp, mv, keys=["n_name"], sums=["o_totalprice"],
         mins=["o_totalprice"], maxs=["o_totalprice"],
+        dims=[{"path": cp, "on": ["custkey"]}, {"path": np_, "on": ["nationkey"]}],
     )
     migrated = (
         read_snapshot(spark, cp)
@@ -382,12 +375,12 @@ def test_star_mv_minmax_dim_rekey_migrates_extremes(
         .withColumn("nationkey", F.lit(7))
     )
     merge_snapshot(spark, cp, migrated, ["custkey"])
-    refresh_star_mv(spark, mv)
+    refresh_mv(spark, mv)
     got = {
         r["n_name"]: (r["mv_count"], round(r["sum_o_totalprice"], 2),
                       round(r["min_o_totalprice"], 2),
                       round(r["max_o_totalprice"], 2))
-        for r in read_star_mv(spark, mv).collect()
+        for r in read_mv(spark, mv).collect()
     }
     expect = {
         r["n_name"]: (r["mv_count"], round(r["sum_o_totalprice"], 2),
@@ -438,7 +431,7 @@ def test_star_mv_streaming_triggered_refresh(spark, fact, cust, nation, tmp_path
     refreshes: list[int] = []
 
     def on_batch(batch_df, batch_id):
-        refreshes.append(refresh_star_mv(batch_df.sparkSession, mv))
+        refreshes.append(refresh_mv(batch_df.sparkSession, mv))
 
     q = (
         spark.readStream.format("versioned_table")
@@ -453,9 +446,9 @@ def test_star_mv_streaming_triggered_refresh(spark, fact, cust, nation, tmp_path
     q.stop()
 
     assert refreshes, "stream delivered no batches"
-    assert _as_map(read_star_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
+    assert _as_map(read_mv(spark, mv)) == _recompute(spark, fp, cp, np_)
     v = current_version(mv)
-    assert refresh_star_mv(spark, mv) == v  # trigger is idempotent
+    assert refresh_mv(spark, mv) == v  # trigger is idempotent
 
 
 def test_star_mv_crash_coherence_refusal(spark, fact, cust, nation, tmp_path):
@@ -466,13 +459,13 @@ def test_star_mv_crash_coherence_refusal(spark, fact, cust, nation, tmp_path):
 
     fp, cp, np_, mv = _setup(spark, fact, cust, nation, tmp_path)
     append_snapshot(fact.filter("o_orderkey % 2 = 1"), fp)
-    refresh_star_mv(spark, mv)
+    refresh_mv(spark, mv)
     meta_path = str(tmp_path / "mv" / "_mv_meta.json")
     meta = json.load(open(meta_path))
     meta["mv_version"] -= 1  # simulate: commit landed, meta write did not
     json.dump(meta, open(meta_path, "w"))
     with pytest.raises(RuntimeError, match="crashed between commit"):
-        refresh_star_mv(spark, mv)
+        refresh_mv(spark, mv)
 
 
 def test_star_mv_randomized_operation_sequences(
@@ -525,7 +518,7 @@ def test_star_mv_randomized_operation_sequences(
     for round_no in range(3):
         for _ in range(rng.randrange(1, 4)):
             rng.choice(ops)()
-        refresh_star_mv(spark, mv)
-        assert _as_map(read_star_mv(spark, mv)) == _recompute(
+        refresh_mv(spark, mv)
+        assert _as_map(read_mv(spark, mv)) == _recompute(
             spark, fp, cp, np_
         ), f"divergence after random round {round_no}"

@@ -451,6 +451,59 @@ class TestStreaming:
         finally:
             srv.close()
 
+    def test_http_sink_stream_survives_out_of_range_numbers(self, spark, tmp_path):
+        """Events that pass isEventOk but carry numbers whose millisecond-
+        scaled integer overflows a long must not fail their micro-batch: a
+        failed batch is never acked, so every restart would replay and fail
+        it again. The stream terminates, posts every event, and the normal
+        events keep their insert_ids."""
+        normal = payloads_for(12)
+        poison = [
+            {"device_id": "p-0", "event_type": "login", "time": 1e300,
+             "session_id": 1},
+            # parseInt repairs the string to 1e23
+            {"device_id": "p-1", "event_type": "login",
+             "time": 1704067200000, "session_id": "99999999999999999999999"},
+            # scales to exactly -2^63, whose abs() overflows a long
+            {"device_id": "p-2", "event_type": "login",
+             "time": 1704067200000, "session_id": -9223372036854775.808},
+        ]
+        mixed = normal[:4] + poison[:1] + normal[4:8] + poison[1:] + normal[8:]
+        src = str(tmp_path / "in")
+        write_payload_files(mixed, src, files=3)
+        expected = {
+            r["device_id"]: r["insert_id"]
+            for r in event_pipeline(
+                spark.createDataFrame(
+                    [(json.dumps(p),) for p in normal], "payload string"
+                ),
+                KEY,
+            ).collect()
+        }
+
+        srv = KeepAliveCountingServer()
+        try:
+            cfg = PipelineConfig(
+                amplitude_api_key="k",
+                hmac_key=KEY,
+                max_events_per_batch=100,
+                endpoint=srv.endpoint,
+            )
+            stream = read_payload_stream(spark, src, max_files_per_trigger=1)
+            q = run_pipeline(
+                stream, cfg, str(tmp_path / "ckpt"), sink=http_batch_sink
+            )
+            assert q.awaitTermination(120)
+            assert q.exception() is None
+            events = [e for b in srv.bodies for e in b["events"]]
+            assert len(events) == len(mixed)
+            got = {e["device_id"]: e["insert_id"] for e in events}
+            assert {d: got[d] for d in expected} == expected
+            for p in poison:
+                assert re.fullmatch(r"[0-9a-f]{64}", got[p["device_id"]])
+        finally:
+            srv.close()
+
     def test_streaming_dedup_within_watermark(self, spark, tmp_path):
         # same logical event in two micro-batches → one survivor
         payloads = payloads_for(4, dup_of=1)

@@ -614,3 +614,33 @@ def test_staged_changes_columns_are_base_schema_plus_change_type(
     cdf = txn.staged_changes(t, spark)
     assert cdf.columns == ["k", "v", "_change_type"]
     assert {tuple(r) for r in cdf.collect()} == want
+
+
+def test_stream_txn_merge_gate_survives_empty_cdc_batches(spark, tmp_path, sf_smoke):
+    """At a small scale factor a CDC batch can be empty: with no
+    event_id % 8 in {0, 4} both update batches are. The gate must still
+    stage 4 files, run 4 micro-batches and return the per-type summary."""
+    import pyarrow.parquet as pq
+
+    from fxa_amplitude_send_spark.plans import all_queries
+
+    events = pq.read_table(os.path.join(sf_smoke, "events.parquet"))
+    ids = events["event_id"].to_pylist()
+    keep = [i for i, x in enumerate(ids) if x % 8 not in (0, 4)][:12]
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    pq.write_table(events.take(keep), str(sf_dir / "events.parquet"))
+
+    want = {
+        r["event_type"]: (r["n"], r["s"])
+        for r in spark.read.parquet(str(sf_dir / "events.parquet"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
+        )
+        .collect()
+    }
+    out = all_queries()["q_stream_txn_merge"](spark, str(sf_dir))
+    got = {r["event_type"]: (r["n"], r["sum_value_c"]) for r in out.collect()}
+    assert got == want
