@@ -27,6 +27,8 @@ if REPO not in sys.path:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # read before SPARK_GRAFT_CPUS is exported for build_session below
+    default_cpus = "SPARK_GRAFT_CPUS" not in os.environ
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
@@ -117,11 +119,12 @@ def main() -> None:
     # regression is a one-line diff instead of a JSON-tail excavation.
     import glob
 
-    # subset runs and non-default-SF runs must not rewrite the sf0.1
-    # full-registry trend (an sf1 study would silently replace the
-    # "current" column with numbers at a different scale)
+    # subset runs and non-default-SF or non-default-CPU runs must not
+    # rewrite the sf0.1 full-registry trend (an sf1 study or an 8-core run
+    # would silently replace the "current" column with numbers taken under
+    # different conditions)
     default_sf = "SPARK_GRAFT_SF_DIR" not in os.environ
-    if not only and default_sf:
+    if not only and default_sf and default_cpus:
         cols: list[tuple[str, dict]] = []
         for p in sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json"))):
             try:

@@ -153,19 +153,6 @@ def hmac_sha256(key: str, *cols: Column) -> Column:
     return _hmac_udf(*cols)
 
 
-def insert_id_col(key: str, user_id: Column, device_id: Column, session_id: Column, event_type: Column, time: Column) -> Column:
-    """Canonical event-identity key for idempotent-sink dedup (utils.js:74).
-
-    `user_id` must already be the HMAC-hashed value (utils.js:70 runs first).
-    """
-    return hmac_sha256(key, user_id, device_id, session_id, event_type, time)
-
-
-def sha256_hex(col: Column) -> Column:
-    """Plain SHA-256 (JVM-side, codegen'd) — for non-keyed fingerprints."""
-    return F.sha2(col.cast("string"), 256)
-
-
 def hmac_user_and_insert_id(
     key: str,
     user_id: Column,
@@ -308,13 +295,6 @@ def js_contrib_grid_double(c: Column, scale: int) -> Column:
         .when(fits, _js_grid_decimal_str(scaled.cast("long"), scale))
         .otherwise(c.cast("string"))
     )
-
-
-def js_contrib_integral_double(c: Column) -> Column:
-    """Contribution of a DOUBLE property that is integral-valued by
-    construction (repaired session ids: parseInt output or -1): same
-    falsy-skip, rendered without a decimal point (``String(5.0) === '5'``)."""
-    return js_contrib_grid_double(c, 0)
 
 
 def hmac_sha256_concat_jvm(key: str, *contribs: Column) -> Column:

@@ -1,11 +1,11 @@
 """Similarity search over embedding columns: exact brute-force baseline and
 LSH-bucketed approximate path.
 
-Scale design: brute-force top-k against ONE query is a broadcast + linear
-scan + TakeOrderedAndProject — optimal as-is. For many-query / all-pairs
-workloads the hyperplane-LSH bucket join turns the O(n·m) similarity matrix
-into an equi-join on bucket ids; recall is tuned by n_planes (bucket width)
-and multi-probe (neighboring buckets).
+Scale design: exact top-k for a bounded query set (brute_force_topk_many)
+is one corpus scan with a per-Arrow-batch matmul — scan-bandwidth bound.
+For all-pairs workloads the hyperplane-LSH bucket join turns the O(n·m)
+similarity matrix into an equi-join on bucket ids; recall is tuned by
+n_planes (bucket width) and multi-probe (neighboring buckets).
 """
 
 from __future__ import annotations
@@ -13,8 +13,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.vectors import cosine_similarity_col
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -125,24 +123,6 @@ def _bucket_rerank(e: DataFrame, q: DataFrame, k: int, id_col: str) -> DataFrame
         e.groupBy("_t", "_b")
         .cogroup(q.groupBy("_t", "_b"))
         .applyInPandas(score, schema=f"query_id long, {id_col} long, cos_sim double")
-    )
-
-
-def brute_force_topk(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qvec",
-) -> DataFrame:
-    """Exact cosine top-k of ``emb`` against a single-row ``query`` frame."""
-    joined = emb.crossJoin(F.broadcast(query))
-    sim = cosine_similarity_col(F.col(vec_col), F.col(query_vec_col))
-    return (
-        joined.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
     )
 
 

@@ -45,13 +45,3 @@ def build_session(app_name: str = "fxa-amplitude-send-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
-
-
-def tune_for_scale(spark: SparkSession, target_partitions: int | None = None) -> None:
-    """Adjust runtime-settable knobs for a given data scale.
-
-    On a real cluster reading ~100 TB you want shuffle partitions sized so a
-    post-shuffle partition is ~100-200 MB; AQE coalesces down from there.
-    """
-    if target_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target_partitions))

@@ -118,6 +118,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.versioned_stream import _replace_refusal
 from .versioned import (
     _commit,
     _count_staged,
@@ -442,12 +443,7 @@ def _change_feed(
                 "version since the last refresh; rebuild with create_mv()"
             ) from None
         if m.get("kind") == "replace":
-            raise RuntimeError(
-                f"base {base_path}: version {v} is a full REPLACE "
-                "(write_snapshot over existing content) — its manifest lists "
-                "the entire replacement under 'appended', which is not an "
-                "incremental delta; rebuild the view with create_mv()"
-            )
+            raise _replace_refusal(base_path, v)
         inserts += [os.path.join(base_path, rel) for rel in m.get("appended", [])]
         physical += [os.path.join(base_path, rel) for rel in m.get("changes", [])]
     parts = []

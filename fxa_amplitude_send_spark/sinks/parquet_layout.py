@@ -5,6 +5,12 @@ predicates into pruned file listings (zero IO for excluded partitions), and
 bucketing pre-shuffles both sides of a recurring join key so the join runs
 shuffle-free forever after. These helpers wrap the two patterns with the
 knobs that matter.
+
+Compaction and z-order clustering are not written here: they rewrite a
+table, so they live in ``sinks/versioned.compact_snapshot``, which commits
+the rewrite as a new manifest version (time travel and crash safety come
+with it). This module only supplies the z-order key (``zorder_key`` over
+``_rank_bucket``-normalized columns) that it uses.
 """
 
 from __future__ import annotations
@@ -25,56 +31,6 @@ def write_partitioned(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.partitionBy(*partition_cols).parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    sort_within_by: str | None = None,
-) -> int:
-    """Small-file compaction (the OPTIMIZE maintenance job): rewrite a
-    parquet directory into ``target_files`` files, optionally sorting
-    within partitions to restore min/max skipping locality. Streaming
-    sinks and over-parallel writers accrete thousands of tiny files whose
-    per-file open/footer cost dominates scans at 100 TB — periodic
-    compaction is the standard fix. Rewrites via a temp dir then swaps
-    (path → ._compact_old, ._compact_tmp → path), so the data is never
-    truncated: every directory involved always holds a complete copy. The
-    swap is two renames, so a crash BETWEEN them can leave the table path
-    momentarily absent with the data intact in ._compact_old — entry-time
-    recovery below renames it back automatically on the next run (and any
-    stale ._compact_tmp from a crashed rewrite is deleted), so no state a
-    crash can produce needs manual repair or fails the next run. Returns
-    the file count after compaction."""
-    import glob
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    # recover from a previously crashed run before touching anything:
-    #  - crash mid-rewrite → stale tmp (partial data): delete
-    #  - crash between the two swap renames → path missing, old complete:
-    #    restore it
-    #  - crash before old was removed → path complete, old stale: delete
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-    df = spark.read.parquet(path)
-    out = df.coalesce(target_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(sort_within_by)
-    out.write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len(glob.glob(os.path.join(path, "*.parquet")))
 
 
 def write_bucketed_table(
@@ -151,32 +107,3 @@ def _rank_bucket(df: DataFrame, col: str, bits: int):
     return F.size(
         F.filter(bounds_arr, lambda b: b <= F.col(col).cast("double"))
     ).cast("long")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 6,
-    n_files: int = 8,
-) -> None:
-    """Cluster a table for 2-dimensional data skipping: rank-normalize both
-    columns to [0, 2^bits) (see _rank_bucket), interleave to a Morton key,
-    range-partition by the key (contiguous key ranges per file → tight
-    per-file boxes) and sort within partitions so row groups inherit the
-    locality. One quantile sketch + one range shuffle at write time buys
-    min/max pruning on BOTH columns for every query after."""
-    from pyspark.sql import functions as F
-
-    keyed = df.withColumn(
-        "_zkey",
-        zorder_key(_rank_bucket(df, col_a, bits), _rank_bucket(df, col_b, bits), bits),
-    )
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

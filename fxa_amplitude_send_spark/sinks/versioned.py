@@ -413,8 +413,8 @@ def compact_snapshot(
 
     ``zorder_by=(col_a, col_b)`` runs OPTIMIZE-ZORDER-style clustering
     instead of a plain coalesce: both columns are rank-normalized, Morton-
-    interleaved, range-partitioned and sorted (sinks/parquet_layout
-    machinery), so the rewritten files carry tight min/max boxes in BOTH
+    interleaved (sinks/parquet_layout.zorder_key), range-partitioned and
+    sorted, so the rewritten files carry tight min/max boxes in BOTH
     dimensions — and because those boxes land in the manifest stats at
     commit, read_snapshot's manifest-level pruning gets 2-D skipping on the
     compacted table for free."""

@@ -1,10 +1,9 @@
 from .formats import read_as, stage_roundtrip
-from .tables import TABLE_NAMES, load_table, load_tables, register_views
+from .tables import TABLE_NAMES, load_table, register_views
 
 __all__ = [
     "TABLE_NAMES",
     "load_table",
-    "load_tables",
     "read_as",
     "register_views",
     "stage_roundtrip",

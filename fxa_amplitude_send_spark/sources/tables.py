@@ -69,14 +69,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register all tables as temp views so plans can be written in SQL too."""
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Expose every table as a temp view under its own name (idempotent), so
+    plans can be written in SQL too."""
     for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
 
 def table_row_count(sf_dir: str, name: str) -> int:
     """Row count from parquet FOOTER metadata — zero Spark jobs, zero data

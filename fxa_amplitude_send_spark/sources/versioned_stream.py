@@ -6,9 +6,11 @@ Offsets ARE table versions: each micro-batch covers the manifests committed
 in (start_version, end_version] and reads exactly their ``appended`` file
 lists — appends flow through once, compactions contribute nothing (their
 appended list is empty), and a restart resumes from the checkpointed
-version. Combined with sinks/versioned.versioned_stream_writer (exactly-once
-appends) this closes the loop: table → stream → table with no duplicates in
-either direction.
+version. With ``readChangeFeed=true`` a REPLACE version fails the stream, as
+the batch change feed refuses it: its appended list is the whole
+replacement, not a delta. Combined with
+sinks/versioned.versioned_stream_writer (exactly-once appends) this closes
+the loop: table → stream → table with no duplicates in either direction.
 
 Partitioning: one input partition per appended file, so read parallelism
 follows the append's own file count. Row decode happens executor-side via
@@ -32,6 +34,21 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
+
+
+def _replace_refusal(path: str, v: int) -> RuntimeError:
+    """The change feed's refusal of a REPLACE version, raised by both the
+    batch reader (sinks/materialized_view._change_feed) and the streaming
+    one: a replace lists ALL its files under ``appended``, so emitting them
+    as inserts would add the whole replacement without retracting the
+    prior content."""
+    return RuntimeError(
+        f"base {path}: version {v} is a full REPLACE "
+        "(write_snapshot over existing content) — its manifest lists "
+        "the entire replacement under 'appended', which is not an "
+        "incremental delta; rebuild the consumer from the current snapshot "
+        "(a view: create_mv())"
+    )
 
 
 class _AppendedFilePartition(InputPartition):
@@ -116,6 +133,8 @@ class _VersionedStreamReader(DataSourceStreamReader):
         parts = []
         for v in range(lo + 1, hi + 1):
             m = self._manifest(v)
+            if self.cdf and m.get("kind") == "replace":
+                raise _replace_refusal(self.path, v)
             for rel in m["appended"]:
                 parts.append(
                     _AppendedFilePartition(

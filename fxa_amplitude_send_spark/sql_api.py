@@ -17,18 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources import load_table
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every testdata table as a temp view (idempotent)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+from .sources import register_views
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

@@ -34,10 +34,6 @@ from pyspark.sql import functions as F
 from ..sinks.versioned import append_snapshot_idempotent
 
 
-def _fingerprints(docs: DataFrame) -> DataFrame:
-    return docs.select(F.sha2(F.col("text"), 256).alias("fingerprint"))
-
-
 def ingest_batch(
     batch_docs: DataFrame, table_path: str, index_path: str, txn_id: str
 ) -> int:

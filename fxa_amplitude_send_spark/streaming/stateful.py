@@ -177,79 +177,3 @@ def ewma_per_user(events: DataFrame, alpha: float = 0.3) -> DataFrame:
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-
-def running_user_totals_v2(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Per-key running totals on the ARBITRARY STATEFUL V2 API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``) — the Spark 4
-    successor to applyInPandasWithState, with typed composable state
-    (value/list/map), timers, and initial-state seeding. Semantics are
-    identical to :func:`running_user_totals` (pytest-asserted), so the two
-    APIs are directly comparable in this codebase.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``RocksDBStateStoreProvider``) — transformWithState is implemented only
-    there, which is also the production-correct backend once state outgrows
-    executor heap — plus the ``protobuf`` package (the tws state-server
-    wire protocol; part of Spark's published Python requirements). The
-    equivalence test skips with an explicit reason where protobuf is
-    absent; :func:`running_user_totals` is the dependency-free v1 twin
-    verified everywhere.
-
-    Scale contract is unchanged: state is partitioned by the group key and
-    bounded by (distinct keys × one (long, double) row); at 100 TB add a
-    TTL/timer for eviction of dormant keys (the v2 API's
-    ``registerTimer``/``handleExpiredTimer`` replaces v1's timeoutConf).
-    """
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=make_running_totals_processor(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def make_running_totals_processor():
-    """Instantiate the v2 StatefulProcessor for running per-user totals.
-
-    Factored out of :func:`running_user_totals_v2` so its state-transition
-    logic is executable WITHOUT Spark's tws state server (which needs the
-    protobuf runtime, absent in some environments): the in-process harness
-    in tests/test_stateful_streaming.py drives init/handleInputRows/close
-    against a stub handle and checks the accumulated totals against the
-    batch ground truth — so the processor body is verified everywhere, and
-    only Spark's own wire machinery stays behind the protobuf gate.
-
-    The class is defined INSIDE this factory so cloudpickle serializes it
-    by value — executor Python workers don't have the repo package on
-    sys.path (executor pickling discipline)."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self._totals = handle.getValueState(
-                "totals", "n_events long, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            prior = self._totals.get() if self._totals.exists() else (0, 0.0)
-            n_events, total_value = int(prior[0]), float(prior[1])
-            for pdf in rows:
-                n_events += len(pdf)
-                total_value += float(pdf["value"].sum())
-            self._totals.update((n_events, total_value))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "total_value": [round(total_value, 6)],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return _RunningTotals()

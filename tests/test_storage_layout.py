@@ -77,15 +77,20 @@ def test_bucketed_join_has_no_shuffle(spark, sf_smoke, tmp_path):
 
 def test_zorder_bounds_both_dimensions(spark, sf_smoke, tmp_path):
     """Per-file min/max boxes (read from the parquet footers) must be tight
-    in BOTH dimensions under z-order, while a linear sort leaves its
-    trailing dimension unbounded — the property that makes multi-dim range
-    predicates prunable."""
+    in BOTH dimensions after a z-ordered compact_snapshot, while a linear
+    sort leaves its trailing dimension unbounded — the property that makes
+    multi-dim range predicates prunable."""
     import glob
+    import os
 
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from fxa_amplitude_send_spark.sinks.parquet_layout import write_zordered
+    from fxa_amplitude_send_spark.sinks.versioned import (
+        _read_manifest,
+        compact_snapshot,
+        write_snapshot,
+    )
 
     ev = (
         spark.read.parquet(f"{sf_smoke}/events.parquet")
@@ -101,11 +106,17 @@ def test_zorder_bounds_both_dimensions(spark, sf_smoke, tmp_path):
         .write.mode("overwrite")
         .parquet(lin_path)
     )
-    write_zordered(ev, z_path, "a", "b", bits=6, n_files=16)
+    write_snapshot(ev, z_path)
+    v = compact_snapshot(
+        spark, z_path, target_files=16, zorder_by=("a", "b"), zorder_bits=6
+    )
+    z_files = [
+        os.path.join(z_path, e["path"]) for e in _read_manifest(z_path, v)["files"]
+    ]
 
-    def file_boxes(path):
+    def file_boxes(files):
         boxes = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
+        for f in files:
             md = pq.ParquetFile(f).metadata
             mins = {"a": None, "b": None}
             maxs = {"a": None, "b": None}
@@ -125,7 +136,8 @@ def test_zorder_bounds_both_dimensions(spark, sf_smoke, tmp_path):
             1 for mins, maxs in boxes if not (maxs[col] < lo or mins[col] > hi)
         )
 
-    lin, zed = file_boxes(lin_path), file_boxes(z_path)
+    lin = file_boxes(glob.glob(f"{lin_path}/part-*.parquet"))
+    zed = file_boxes(z_files)
     n_lin, n_z = len(lin), len(zed)
     assert n_lin >= 4 and n_z >= 4  # range partitions can merge empty slots
     # ~10%-selective range on the TRAILING dimension b (20th-30th
@@ -140,65 +152,6 @@ def test_zorder_bounds_both_dimensions(spark, sf_smoke, tmp_path):
     a20, a30 = ev.stat.approxQuantile("a", [0.20, 0.30], 0.0)
     assert overlapping(lin, "a", a20, a30) <= max(2, n_lin // 4)
     assert overlapping(zed, "a", a20, a30) <= n_z // 2
-
-
-def test_compaction_reduces_files_preserves_rows(spark, sf_smoke, tmp_path):
-    """OPTIMIZE-style rewrite: 64 tiny files -> 4, identical row multiset,
-    and the old directory is swapped out atomically (no *_compact_* residue)."""
-    import glob
-    import os
-
-    from fxa_amplitude_send_spark.sinks.parquet_layout import compact_parquet
-    from fxa_amplitude_send_spark.sources import load_table
-
-    ev = load_table(spark, sf_smoke, "events").select("event_id", "user_id", "value")
-    path = str(tmp_path / "fragmented")
-    ev.repartition(64).write.parquet(path)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 64
-    before = ev.count()
-    before_sum = ev.agg({"value": "sum"}).collect()[0][0]
-
-    n_files = compact_parquet(spark, path, target_files=4, sort_within_by="event_id")
-    assert n_files <= 4
-    after_df = spark.read.parquet(path)
-    assert after_df.count() == before
-    assert abs(after_df.agg({"value": "sum"}).collect()[0][0] - before_sum) < 1e-6
-    assert not glob.glob(str(tmp_path / "fragmented._compact*"))
-
-
-def test_compaction_recovers_from_crash_states(spark, sf_smoke, tmp_path):
-    """Every directory state a crashed compaction can leave behind must be
-    repaired automatically by the next run: stale ._compact_tmp (crash
-    mid-rewrite), table renamed away to ._compact_old with path missing
-    (crash between the swap renames), and leftover ._compact_old next to a
-    live path (crash before cleanup)."""
-    import glob
-    import os
-    import shutil
-
-    from fxa_amplitude_send_spark.sinks.parquet_layout import compact_parquet
-    from fxa_amplitude_send_spark.sources import load_table
-
-    ev = load_table(spark, sf_smoke, "events").select("event_id", "user_id")
-    path = str(tmp_path / "tbl")
-    ev.repartition(8).write.parquet(path)
-    n_rows = ev.count()
-
-    # state 1: stale tmp with garbage from a crashed rewrite
-    os.makedirs(path + "._compact_tmp")
-    with open(path + "._compact_tmp/part-junk.parquet", "w") as fh:
-        fh.write("not parquet")
-    # state 3 precursor: stale old dir next to a live path
-    shutil.copytree(path, path + "._compact_old")
-    assert compact_parquet(spark, path, target_files=2) <= 2
-    assert spark.read.parquet(path).count() == n_rows
-    assert not glob.glob(path + "._compact*")
-
-    # state 2: crash between the two swap renames — path missing entirely
-    os.rename(path, path + "._compact_old")
-    assert compact_parquet(spark, path, target_files=2) <= 2
-    assert spark.read.parquet(path).count() == n_rows
-    assert not glob.glob(path + "._compact*")
 
 
 def test_zorder_key_is_true_morton_code(spark):

@@ -601,54 +601,100 @@ class TestIncrementalView:
     def test_view_equals_batch_aggregate_and_survives_restarts(
         self, spark, sf_smoke, tmp_path
     ):
-        """After draining the stream in rate-limited micro-batches, the
-        maintained parquet view must equal the one-shot batch rollup; a
-        second availableNow run over the same checkpoint must be a no-op
-        (no double counting — the merge is driven by committed offsets)."""
+        """Each micro-batch is appended exactly once to a versioned table
+        (txn id = query tag + batch id) and the COUNT/SUM view is refreshed
+        from its change feed in the same foreachBatch. After draining the
+        stream the view equals the one-shot batch aggregate; a restart over
+        the same checkpoint is a no-op; and a REPLAY of the last batch (its
+        commit log entry deleted, as after a crash between the sink and the
+        checkpoint commit) leaves the table version and the view unchanged."""
+        import os
+
         import pyspark.sql.functions as F
 
-        from fxa_amplitude_send_spark.streaming.incremental import (
-            batch_rollup,
-            maintain_incremental_view,
+        from fxa_amplitude_send_spark.sinks.materialized_view import (
+            create_mv,
+            read_mv,
+            refresh_mv,
+        )
+        from fxa_amplitude_send_spark.sinks.versioned import (
+            append_snapshot_idempotent,
+            current_version,
+            streaming_txn_tag,
         )
 
+        # money on the integer-cents grid, as in q_stream_mv
         events = spark.read.parquet(f"{sf_smoke}/events.parquet").select(
-            "event_type", "value"
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("value_c"),
         )
         src_dir = str(tmp_path / "events_in")
         # several input files so availableNow processes multiple batches
         events.repartition(4).write.mode("overwrite").parquet(src_dir)
 
-        store = str(tmp_path / "view_store")
+        table = str(tmp_path / "events_table")
+        mv = str(tmp_path / "view")
         ckpt = str(tmp_path / "ckpt")
-        stream = (
-            spark.readStream.schema("event_type string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = maintain_incremental_view(stream, store, ckpt)
-        q.awaitTermination(120)
 
+        delivered: list[int] = []
+
+        def ingest(batch_df, batch_id):
+            delivered.append(batch_id)
+            txn = f"{streaming_txn_tag(batch_df, ckpt)}-{batch_id}"
+            append_snapshot_idempotent(batch_df, table, txn)
+            if current_version(mv) == 0:
+                create_mv(
+                    batch_df.sparkSession, table, mv,
+                    keys=["event_type"], sums=["value_c"],
+                )
+            else:
+                refresh_mv(batch_df.sparkSession, mv)
+
+        def run():
+            delivered.clear()
+            q = (
+                spark.readStream.schema("event_type string, value_c long")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src_dir)
+                .writeStream.foreachBatch(ingest)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            return list(delivered)
+
+        def view():
+            return {
+                (r.event_type, r.mv_count, int(r.sum_value_c))
+                for r in read_mv(spark, mv).collect()
+            }
+
+        assert run() == [0, 1, 2, 3]
         expected = {
-            (r.event_type, r.n_events, r.total_value)
-            for r in batch_rollup(events).collect()
+            (r.event_type, r.n, r.s)
+            for r in events.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("value_c").alias("s"))
+            .collect()
         }
-        got = {
-            (r.event_type, r.n_events, r.total_value)
-            for r in spark.read.parquet(store).collect()
-        }
-        assert got == expected
+        assert view() == expected
+        version = current_version(table)
+        assert version == 4
+        assert current_version(mv) == 4
 
         # restart over the same checkpoint: nothing new to process
-        stream2 = (
-            spark.readStream.schema("event_type string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q2 = maintain_incremental_view(stream2, store, ckpt)
-        q2.awaitTermination(120)
-        again = {
-            (r.event_type, r.n_events, r.total_value)
-            for r in spark.read.parquet(store).collect()
-        }
-        assert again == expected
+        assert run() == []
+        assert current_version(table) == version
+        assert view() == expected
+
+        # replay: drop the last batch's commit so the restart re-runs it
+        commits = os.path.join(ckpt, "commits")
+        last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+        os.remove(os.path.join(commits, str(last)))
+        crc = os.path.join(commits, f".{last}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        assert run() == [last]  # the batch was delivered again
+        assert current_version(table) == version
+        assert current_version(mv) == 4
+        assert view() == expected

@@ -1459,6 +1459,48 @@ def test_stream_cdf_delivers_mor_deletes(spark, base, tmp_path):
     assert inserts == _ids(base)
 
 
+def test_stream_cdf_refuses_replace_like_batch_cdf(spark, base, tmp_path):
+    """A REPLACE version is not a delta: the streaming change feed must fail
+    on it, naming the version, exactly as the batch change feed refuses it
+    (emitting its files as inserts would deliver 18 inserts for a 3-row
+    table). The append feed is unchanged: it still streams every appended
+    file."""
+    from fxa_amplitude_send_spark.sinks.versioned import read_change_feed
+    from fxa_amplitude_send_spark.sources.versioned_stream import (
+        VersionedTableDataSource,
+    )
+
+    spark.dataSource.register(VersionedTableDataSource)
+    path = str(tmp_path / "t")
+    write_snapshot(base.filter("n_nationkey < 10"), path)                 # v1
+    append_snapshot(base.filter("n_nationkey BETWEEN 10 AND 14"), path)  # v2
+    write_snapshot(base.filter("n_nationkey >= 22"), path)  # v3: replace
+    assert read_snapshot(spark, path).count() == 3
+    with pytest.raises(RuntimeError, match="version 3 is a full REPLACE"):
+        read_change_feed(spark, path, since_version=0)
+
+    def drain(cdf: str, name: str):
+        return (
+            spark.readStream.format("versioned_table")
+            .option("path", path)
+            .option("readChangeFeed", cdf)
+            .load()
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    q = drain("true", "replace_cdf_sink")
+    with pytest.raises(Exception, match="version 3 is a full REPLACE"):
+        q.awaitTermination()
+    q.stop()
+
+    drain("false", "replace_append_sink").awaitTermination()
+    assert spark.table("replace_append_sink").count() == 10 + 5 + 3
+
+
 def test_racing_mor_deleters_one_wins(spark, base, tmp_path):
     """Two MoR deletes racing from the same parent: O_EXCL serializes them —
     exactly one v2 exists, the loser errors with a clean conflict, and a

@@ -1,16 +1,27 @@
-"""Interleaved same-session A/B timer for one or more registered queries.
+"""Interleaved same-session A/B timer and job counter for registered queries.
 
-The sandbox's wall-clock throughput drifts minute to minute (shared host),
-so sequential whole-process A/Bs are unreliable. This tool runs variants
+Wall-clock throughput on a shared host drifts minute to minute, so
+sequential whole-process A/Bs are unreliable. This tool runs variants
 INTERLEAVED (A B A B ...) inside ONE SparkSession and reports per-variant
-min/median — the only defensible comparison regime on this box.
+min/median seconds.
+
+Each timed run also executes inside its own job group, and the scheduler's
+status tracker reports every Spark job that group launched, including the
+work a gate query does while BUILDING its result (lifecycle commits,
+micro-batch replays) and the noop-sink action on the returned frame. That
+count is the deterministic evidence for "fewer jobs" claims; a formatted
+plan shows only the final read.
 
 Usage:
-  python tools/ab_timer.py QUERY[,QUERY...] ENVVAR=a|b[,ENVVAR2=...] [reps]
+  python tools/ab_timer.py QUERY[,QUERY...] [ENVVAR=a|b[,ENVVAR2=...]] [reps]
 
 Each variant spec is ENV assignments applied before the query function runs
-(query functions read the env at call time). Example — the stateful stream
-gates' shuffle-partition count at 4 vs 8:
+(query functions read the env at call time). With no spec there is one
+variant. Job counts only, one run per query:
+
+  python tools/ab_timer.py q_tpch_q3,q_stream_mv "" 1
+
+Timing the stateful stream gates' shuffle-partition count at 4 vs 8:
 
   python tools/ab_timer.py q_stream_tumbling SPARK_GRAFT_STREAM_PARTITIONS=4|8 6
 """
@@ -21,6 +32,7 @@ import os
 import statistics
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
@@ -48,20 +60,29 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
+    sc = spark.sparkContext
     times: dict[tuple[str, int], list[float]] = {}
+    jobs: dict[tuple[str, int], list[int]] = {}
     for rep in range(reps):
         for vi in range(n_variants):
             for var, vals in assigns:
                 os.environ[var] = vals[min(vi, len(vals) - 1)]
             for name in names:
-                spark.sparkContext.setJobDescription(f"{name} v{vi} r{rep}")
+                group = f"ab-{uuid.uuid4().hex[:8]}"
+                sc.setJobGroup(group, f"{name} v{vi} r{rep}")
                 t0 = time.perf_counter()
                 queries[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 dt = time.perf_counter() - t0
+                sc.setJobGroup(None, None)
+                n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
                 times.setdefault((name, vi), []).append(dt)
-                print(f"rep{rep} variant{vi} {name}: {dt:.3f}s", flush=True)
+                jobs.setdefault((name, vi), []).append(n_jobs)
+                print(
+                    f"rep{rep} variant{vi} {name}: {dt:.3f}s jobs={n_jobs}",
+                    flush=True,
+                )
 
     print("\n=== summary ===")
     for name in names:
@@ -70,7 +91,8 @@ def main() -> None:
             lab = ",".join(f"{var}={vals[min(vi, len(vals)-1)]}" for var, vals in assigns)
             print(
                 f"{name} [{lab}] min={min(ts):.3f} "
-                f"median={statistics.median(ts):.3f} all={[round(t,2) for t in ts]}"
+                f"median={statistics.median(ts):.3f} all={[round(t,2) for t in ts]} "
+                f"jobs={jobs[(name, vi)]}"
             )
 
 
